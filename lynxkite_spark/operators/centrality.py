@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from lynxkite_spark.graph import Graph
+from lynxkite_spark.plans.iterate import broadcasts
 
 
 def eigenvector_centrality(
@@ -36,7 +37,7 @@ def eigenvector_centrality(
     x = vertices.select("id", F.lit(1.0 / n).alias("x")).localCheckpoint(eager=False)
     # broadcast only truly small state: building a broadcast relation is a
     # serial driver step per iteration (see pagerank.py)
-    small = n <= 200_000
+    small = broadcasts(n)
     limit = iterations if iterations is not None else max_iterations
     for k in range(limit):
         lookup = x.select(F.col("id").alias("src"), "x")
@@ -88,7 +89,7 @@ def katz_centrality(
     n = vertices.count()
     # broadcast only truly small state: building a broadcast relation is a
     # serial driver step per iteration (see pagerank.py)
-    small = n <= 200_000
+    small = broadcasts(n)
     x = vertices.select("id", F.lit(beta).alias("x")).localCheckpoint(eager=False)
     for _ in range(iterations):
         lookup = x.select(F.col("id").alias("src"), "x")

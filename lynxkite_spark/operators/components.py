@@ -26,11 +26,15 @@ Both are integer-exact by construction (min/joins only, no float math).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from lynxkite_spark.graph import Graph
+from lynxkite_spark.plans.checkpoint import step_key
+from lynxkite_spark.plans.iterate import PREV, broadcasts, changed_rows, run_supersteps
 
 
 def _symmetrized(edges: DataFrame) -> DataFrame:
@@ -95,57 +99,50 @@ def connected_components(
     total function (every vertex labeled), component = min vertex id.
 
     With a ``CheckpointManager``, the min-label variant writes its label
-    table every ``checkpoint_every`` rounds and a rerun resumes from the
-    newest stored round (labels are exact longs — bit-identical resume).
+    table every ``checkpoint_every`` rounds and at the cap, and a rerun
+    resumes from the newest stored round (labels are exact longs —
+    bit-identical resume).
     The star variant's state is the contracted edge set itself and is
     checkpointed the same way."""
-    spark = graph.vertices.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(graph.vertices.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     vertices = graph.vertices.select("id")
-    edges = _symmetrized(graph.edges).repartition(n_part, "src")
-
-    from lynxkite_spark.plans.checkpoint import materialize, step_key
-
+    edges = _symmetrized(graph.edges)
     params = {"algorithm": algorithm, "max_iterations": max_iterations}
-    fp = input_fingerprint or "anon"
+    harness = {
+        "limit": max_iterations,
+        "key": partial(step_key, input_fingerprint or "anon", "cc", params),
+        "checkpoint": checkpoint,
+        "checkpoint_every": checkpoint_every,
+    }
 
     if algorithm == "star":
         # per-round min tables are bounded by the (shrinking) vertex
-        # count: broadcast them below the same threshold pagerank uses
-        # for its rank table — the contracted edge stream then never
+        # count: broadcast them below the same switch pagerank uses for
+        # its rank table — the contracted edge stream then never
         # shuffles for the relink joins, only for groupBy/distinct
-        broadcast_m = graph.vertices.count() <= 200_000
-        e = materialize(edges)
-        start_iter = 0
-        if checkpoint is not None:
-            for k in range(max_iterations, 0, -1):
-                cached = checkpoint.load(step_key(fp, "cc", params, k))
-                if cached is not None:
-                    e = cached
-                    start_iter = k
-                    break
-        prev_count = e.count()
-        for it in range(start_iter, max_iterations):
-            # cut lineage every round — star contraction references e
-            # multiple times per iteration (plan growth, see materialize)
-            new_e = _small_star(
-                _large_star(e, broadcast_m), broadcast_m
-            ).localCheckpoint(eager=False)
-            new_count = new_e.count()
+        broadcast_m = broadcasts(graph.vertices.count())
+        edge_counts: list[int] = []
+
+        def stable(new: DataFrame, old: DataFrame) -> tuple[bool, dict]:
             # converged when the edge set is stable (star graph reached):
             # equal cardinality and no edge outside the old set
-            changed = 1
-            if new_count == prev_count:
-                changed = new_e.exceptAll(e).limit(1).count()
-            e, prev_count = new_e, new_count
-            if checkpoint is not None and (it + 1) % checkpoint_every == 0:
-                e = checkpoint.save(
-                    e,
-                    step_key(fp, "cc", params, it + 1),
-                    metrics={"iteration": it + 1, "edges": new_count},
-                )
-            if changed == 0:
-                break
+            if not edge_counts:
+                edge_counts.append(old.count())
+            n = new.count()
+            stop = n == edge_counts[-1] and new.exceptAll(old).limit(1).count() == 0
+            edge_counts.append(n)
+            return stop, {"edges": n}
+
+        # the state is the contracted edge set itself; star contraction
+        # references it several times per round (plan growth, see
+        # materialize), so the driver's per-round lineage cut matters
+        e = run_supersteps(
+            edges,
+            lambda e, k: _small_star(_large_star(e, broadcast_m), broadcast_m),
+            changed=stable,
+            partition_by="src",
+            **harness,
+        )
         labels = (
             e.where(F.col("src") > F.col("dst"))
             .groupBy("src")
@@ -153,51 +150,34 @@ def connected_components(
             .select(F.col("src").alias("id"), "component")
         )
     else:  # minlabel
-        labels = vertices.select("id", F.col("id").alias("component"))
-        start_iter = 0
-        if checkpoint is not None:
-            for k in range(max_iterations, 0, -1):
-                cached = checkpoint.load(step_key(fp, "cc", params, k))
-                if cached is not None:
-                    labels = cached
-                    start_iter = k
-                    break
-        labels = materialize(labels.repartition(n_part, "id"))
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-        for it in range(start_iter, max_iterations):
+        edges = edges.repartition(n_part, "src").persist(StorageLevel.MEMORY_AND_DISK)
+
+        def step(labels: DataFrame, k: int) -> DataFrame:
             nbr_min = (
                 edges.join(labels.hint("shuffle_hash"), edges.src == labels.id)
                 .groupBy("dst")
                 .agg(F.min("component").alias("nbr_min"))
             )
-            new_labels = (
+            return (
                 labels.join(nbr_min, labels.id == nbr_min.dst, "left")
                 .select(
                     "id",
                     F.least(
                         F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
                     ).alias("component"),
+                    F.col("component").alias(PREV),
                 )
                 .repartition(n_part, "id")
-                .localCheckpoint(eager=False)  # materialized by the change check
             )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .where(F.col("n.component") != F.col("o.component"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels
-            if checkpoint is not None and (it + 1) % checkpoint_every == 0:
-                labels = checkpoint.save(
-                    labels,
-                    step_key(fp, "cc", params, it + 1),
-                    metrics={"iteration": it + 1, "changed": changed},
-                )
-            if changed == 0:
-                break
-        edges.unpersist()
+
+        labels = run_supersteps(
+            vertices.select("id", F.col("id").alias("component")),
+            step,
+            changed=changed_rows("component"),
+            partition_by="id",
+            pinned=[edges],
+            **harness,
+        )
 
     # isolated vertices → singleton components (ConnectedComponents.scala:48-53)
     return (

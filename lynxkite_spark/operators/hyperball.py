@@ -250,63 +250,65 @@ def hyperball(
     if wide:
         prev_codegen = spark.conf.get("spark.sql.codegen.wholeStage", "true")
         spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    for t in range(1, max_distance + 1):
-        if wide:
-            msgs = e.join(
-                state.select(F.col("id").alias("src"), *reg_cols).hint(
-                    "shuffle_hash"
-                ),
-                "src",
-            ).select(F.col("dst").alias("id"), *reg_cols)
-            state = (
-                state.unionByName(msgs)
-                .groupBy("id")
-                .agg(*[F.max(c).alias(c) for c in reg_cols])
-                .localCheckpoint(eager=True)
+    try:
+        for t in range(1, max_distance + 1):
+            if wide:
+                msgs = e.join(
+                    state.select(F.col("id").alias("src"), *reg_cols).hint(
+                        "shuffle_hash"
+                    ),
+                    "src",
+                ).select(F.col("dst").alias("id"), *reg_cols)
+                state = (
+                    state.unionByName(msgs)
+                    .groupBy("id")
+                    .agg(*[F.max(c).alias(c) for c in reg_cols])
+                    .localCheckpoint(eager=True)
+                )
+                est = _estimates_wide(state, log2m)
+            else:
+                msgs = e.join(
+                    state.select(F.col("id").alias("src"), "pos", "reg").hint(
+                        "shuffle_hash"
+                    ),
+                    "src",
+                ).select(F.col("dst").alias("id"), "pos", "reg")
+                state = (
+                    state.unionByName(msgs)
+                    .groupBy("id", "pos")
+                    .agg(F.max("reg").alias("reg"))
+                    .localCheckpoint(eager=True)
+                )
+                est = _estimates(state, vertices, log2m, complete=True)
+            # lazy checkpoint: the accumulator chain is vertex-sized and
+            # referenced once per round — cutting lineage lazily drops one
+            # scheduled job per round (the final action materializes the
+            # chain level by level)
+            acc = (
+                acc.join(est.hint("shuffle_hash"), "id")
+                .select(
+                    "id",
+                    F.col("e").alias("prev"),
+                    (F.col("harmonic") + (F.col("e") - F.col("prev")) / F.lit(float(t))).alias(
+                        "harmonic"
+                    ),
+                    (F.col("sum_d") + F.lit(float(t)) * (F.col("e") - F.col("prev"))).alias(
+                        "sum_d"
+                    ),
+                )
+                .localCheckpoint(eager=False)
             )
-            est = _estimates_wide(state, log2m)
-        else:
-            msgs = e.join(
-                state.select(F.col("id").alias("src"), "pos", "reg").hint(
-                    "shuffle_hash"
-                ),
-                "src",
-            ).select(F.col("dst").alias("id"), "pos", "reg")
-            state = (
-                state.unionByName(msgs)
-                .groupBy("id", "pos")
-                .agg(F.max("reg").alias("reg"))
-                .localCheckpoint(eager=True)
-            )
-            est = _estimates(state, vertices, log2m, complete=True)
-        # lazy checkpoint: the accumulator chain is vertex-sized and
-        # referenced once per round — cutting lineage lazily drops one
-        # scheduled job per round (the final action materializes the
-        # chain level by level)
-        acc = (
-            acc.join(est.hint("shuffle_hash"), "id")
-            .select(
-                "id",
-                F.col("e").alias("prev"),
-                (F.col("harmonic") + (F.col("e") - F.col("prev")) / F.lit(float(t))).alias(
-                    "harmonic"
-                ),
-                (F.col("sum_d") + F.lit(float(t)) * (F.col("e") - F.col("prev"))).alias(
-                    "sum_d"
-                ),
-            )
-            .localCheckpoint(eager=False)
-        )
-        if keep_rounds:
-            rounds.append(est.select("id", F.lit(t).alias("t"), "e"))
-        if early_stop:
-            new_sig = signature()
-            if new_sig == sig:
-                break
-            sig = new_sig
-    if prev_codegen is not None:
-        spark.conf.set("spark.sql.codegen.wholeStage", prev_codegen)
-    e.unpersist()
+            if keep_rounds:
+                rounds.append(est.select("id", F.lit(t).alias("t"), "e"))
+            if early_stop:
+                new_sig = signature()
+                if new_sig == sig:
+                    break
+                sig = new_sig
+    finally:
+        if prev_codegen is not None:
+            spark.conf.set("spark.sql.codegen.wholeStage", prev_codegen)
+        e.unpersist()
     if keep_rounds:
         out = rounds[0]
         for r in rounds[1:]:

@@ -29,6 +29,7 @@ from pyspark.sql import Window as W
 from pyspark.storagelevel import StorageLevel
 
 from lynxkite_spark.graph import Graph
+from lynxkite_spark.plans.iterate import PREV, broadcasts, changed_rows, run_supersteps
 
 
 def h_index_per_vertex(
@@ -84,17 +85,12 @@ def core_decomposition(graph: Graph, max_iterations: int = 100) -> DataFrame:
     n_vertices = vertices.count()
     # same trade as pagerank's broadcast_ranks: while the estimate table
     # is small, ship it into the joins as a broadcast — zero exchanges of
-    # the edge stream per round; past the threshold the shuffle-hash path
+    # the edge stream per round; past the switch the shuffle-hash path
     # takes over (a multi-million-row broadcast build is serial driver
     # work that caps scaling)
-    broadcast_est = n_vertices <= 200_000
-    deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("est"))
-    est = (
-        vertices.join(deg, "id", "left")
-        .select("id", F.coalesce("est", F.lit(0)).alias("est"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iterations):
+    broadcast_est = broadcasts(n_vertices)
+
+    def step(est: DataFrame, k: int) -> DataFrame:
         # gather neighbor estimates onto dst, then per-vertex h-index:
         # sorted desc, h = max(min(est_i, i))
         gather = est.select(F.col("id").alias("src"), F.col("est").alias("n_est"))
@@ -103,21 +99,20 @@ def core_decomposition(graph: Graph, max_iterations: int = 100) -> DataFrame:
         )
         msgs = sym.join(gather, "src").select(F.col("dst").alias("id"), "n_est")
         h = h_index_per_vertex(msgs, est, broadcast_est=broadcast_est)
-        # carry the previous estimate through the checkpoint: the change
-        # check is then a scan of the new table, not a join + extra pass
-        new_est = (
-            est.join(F.broadcast(h) if broadcast_est else h, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("est"), F.coalesce(F.col("h"), F.lit(0))).alias("est"),
-                F.col("est").alias("_old"),
-            )
-            .localCheckpoint(eager=False)  # materialized by the change check
+        # carry the previous estimate: the change check is then a scan
+        # of the new table, not a join + extra pass
+        return est.join(F.broadcast(h) if broadcast_est else h, "id", "left").select(
+            "id",
+            F.least(F.col("est"), F.coalesce(F.col("h"), F.lit(0))).alias("est"),
+            F.col("est").alias(PREV),
         )
-        changed = new_est.where(F.col("est") != F.col("_old")).limit(1).count()
-        est = new_est.drop("_old")
-        if changed == 0:
-            break
-    sym.unpersist()
-    vertices.unpersist()
+
+    deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("est"))
+    est = run_supersteps(
+        vertices.join(deg, "id", "left").select("id", F.coalesce("est", F.lit(0)).alias("est")),
+        step,
+        limit=max_iterations,
+        changed=changed_rows("est"),
+        pinned=[sym, vertices],
+    )
     return est.select("id", F.col("est").alias("core"))

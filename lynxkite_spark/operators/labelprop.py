@@ -17,11 +17,15 @@ Edges are treated as undirected (reference passes directed=false).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from lynxkite_spark.graph import Graph
+from lynxkite_spark.plans.checkpoint import step_key
+from lynxkite_spark.plans.iterate import PREV, broadcasts, changed_rows, run_supersteps
 
 
 def label_propagation(
@@ -31,14 +35,14 @@ def label_propagation(
     checkpoint=None,
     checkpoint_every: int = 10,
     input_fingerprint: str | None = None,
-    broadcast_threshold: int = 200_000,
 ) -> DataFrame:
     """Returns belongs_to: DataFrame[id: long, label: long].
 
     With a ``CheckpointManager`` the label table is written every
-    ``checkpoint_every`` rounds (per-partition lineage sidecar like
-    PageRank's) and a rerun resumes from the newest stored round —
-    labels are exact longs, so a resumed run is bit-identical."""
+    ``checkpoint_every`` rounds and at the cap (per-partition lineage
+    sidecar like PageRank's), and a rerun resumes from the newest
+    stored round — labels are exact longs, so a resumed run is
+    bit-identical."""
     spark = graph.vertices.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     g = graph.with_weight()
@@ -51,30 +55,16 @@ def label_propagation(
     sym = sym.repartition(n_part, "src").persist(StorageLevel.MEMORY_AND_DISK)
     sym.count()
 
-    from lynxkite_spark.plans.checkpoint import materialize, step_key
-
-    params = {"max_iterations": max_iterations, "weighted": weighted}
-    fp = input_fingerprint or "anon"
-    start_iter = 0
-    labels = graph.vertices.select("id", F.col("id").alias("label"))
-    if checkpoint is not None:
-        for k in range(max_iterations, 0, -1):
-            cached = checkpoint.load(step_key(fp, "lpa", params, k))
-            if cached is not None:
-                labels = cached
-                start_iter = k
-                break
-    labels = materialize(labels.repartition(n_part, "id"))
     # Broadcast the vertex-sized label table into the gather join while
     # it is small (same trade as pagerank's broadcast_ranks): the big
     # edge stream is then never exchanged OR sorted per round — the only
     # corpus-sized shuffle left is the map-side-combinable vote count.
-    # Above the threshold the shuffle-hash gather takes over (building a
+    # Above the switch the shuffle-hash gather takes over (building a
     # multi-million-row broadcast is serial driver work that caps
     # scaling).
-    broadcast_labels = graph.vertices.count() <= broadcast_threshold
+    broadcast_labels = broadcasts(graph.vertices.count())
 
-    for it in range(start_iter, max_iterations):
+    def step(labels: DataFrame, k: int) -> DataFrame:
         # gather neighbor labels onto dst; per-(dst,label) weight sums are
         # map-side combinable, so hub vertices don't skew the shuffle
         # hash-build the vertex-sized label table: the big edge stream is
@@ -94,26 +84,21 @@ def label_propagation(
         # carry the previous label through the checkpoint so the change
         # check is a scan of the new table, not a second join (the join
         # shape cost one more exchange + action per round)
-        new_labels = (
-            labels.join(best, labels.id == best.dst, "left")
-            .select(
-                "id",
-                F.coalesce("new_label", "label").alias("label"),
-                F.col("label").alias("_old"),
-            )
-            .localCheckpoint(eager=False)  # materialized by the change check
+        return labels.join(best, labels.id == best.dst, "left").select(
+            "id",
+            F.coalesce("new_label", "label").alias("label"),
+            F.col("label").alias(PREV),
         )
-        changed = (
-            new_labels.where(F.col("label") != F.col("_old")).limit(1).count()
-        )
-        labels = new_labels.drop("_old")
-        if checkpoint is not None and (it + 1) % checkpoint_every == 0:
-            labels = checkpoint.save(
-                labels,
-                step_key(fp, "lpa", params, it + 1),
-                metrics={"iteration": it + 1, "changed": changed},
-            )
-        if changed == 0:
-            break
-    sym.unpersist()
-    return labels
+
+    params = {"max_iterations": max_iterations, "weighted": weighted}
+    return run_supersteps(
+        graph.vertices.select("id", F.col("id").alias("label")),
+        step,
+        limit=max_iterations,
+        changed=changed_rows("label"),
+        partition_by="id",
+        key=partial(step_key, input_fingerprint or "anon", "lpa", params),
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        pinned=[sym],
+    )

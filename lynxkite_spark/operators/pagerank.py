@@ -29,20 +29,23 @@ Scale notes (SURVEY.md §4):
     sources join against a broadcast of just the hot rank rows;
   * groupBy(dst) skew needs no salting — sum() partial-aggregates
     map-side before the shuffle;
-  * lineage is cut with localCheckpoint every few iterations and
-    (optionally) a content-addressed parquet checkpoint for resume.
+  * the superstep driver (plans/iterate.py) cuts lineage every
+    iteration and owns resume from the optional content-addressed
+    parquet checkpoint.
 """
 
 from __future__ import annotations
 
 from dataclasses import replace
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from lynxkite_spark.graph import Graph
-from lynxkite_spark.plans.checkpoint import CheckpointManager, materialize, step_key
+from lynxkite_spark.plans.checkpoint import CheckpointManager, step_key
+from lynxkite_spark.plans.iterate import PREV, broadcasts, run_supersteps
 from lynxkite_spark.plans.skew import hot_keys, hybrid_join
 from lynxkite_spark.plans.spread import plan_is_expensive as _plan_is_expensive
 
@@ -58,7 +61,6 @@ def pagerank(
     checkpoint_every: int = 10,
     input_fingerprint: str | None = None,
     skew_threshold: int | None = None,
-    broadcast_threshold: int = 200_000,
 ) -> DataFrame:
     """Returns DataFrame[id: long, pagerank: double].
 
@@ -123,8 +125,6 @@ def pagerank(
     n_vertices = vertices.count()
     if edges_pinned is not None:
         edges_pinned.unpersist()
-    if n_vertices == 0:
-        return vertices.select("id").withColumn("pagerank", F.lit(0.0))
 
     # localCheckpoint output (LogicalRDD) carries no size stats, so
     # Catalyst can't see that the rank table is broadcastable — hint it
@@ -132,9 +132,9 @@ def pagerank(
     # SERIAL driver-side step repeated every iteration; measured on this
     # box it stops paying for itself around a few hundred thousand rows,
     # and past that it caps scaling (the parallel join is fast, the
-    # broadcast build is not). Above the threshold the co-partitioned
+    # broadcast build is not). Above the switch the co-partitioned
     # shuffle join (or the hybrid hot-key split) takes over.
-    broadcast_ranks = n_vertices <= broadcast_threshold
+    broadcast_ranks = broadcasts(n_vertices)
 
     # hot-key set for the gather join, computed once (HybridRDD semantics);
     # when no key crosses the threshold the plain shuffle join is used —
@@ -152,45 +152,18 @@ def pagerank(
         use_hybrid = hot.count() > 0
 
     params = {"damping": damping, "iterations": iterations, "tol": tol, "direction": direction}
-    fp = input_fingerprint or "anon"
-
-    # resume: find the newest checkpointed iteration
-    start_iter = 0
-    ranks = vertices.select("id", "has_out", F.lit(1.0).alias("pagerank"))
-    if checkpoint is not None:
-        limit = iterations if iterations is not None else max_iterations
-        for k in range(limit, 0, -1):
-            key = step_key(fp, "pagerank", params, k)
-            cached = checkpoint.load(key)
-            if cached is not None:
-                if "has_out" in cached.columns:
-                    ranks = cached
-                else:
-                    ranks = vertices.join(cached.select("id", "pagerank"), "id")
-                start_iter = k
-                break
-    ranks = materialize(ranks.repartition(n_part, "id"))
-
-    limit = iterations if iterations is not None else max_iterations
-    history: list[dict] = []
     # Convergence mode folds the dangling-mass total into the SAME
-    # driver action that computes the delta: the previous iteration's
-    # agg returns (max |Δ|, Σ rank over has_out) together, and the total
-    # enters the next plan as a literal — removing the per-iteration
-    # 1-row aggregate subtree + its broadcast build. The literal is the
-    # identical double (same partial/final sum plan over the same
-    # materialized table; py4j round-trips doubles exactly).
+    # driver action that computes the delta: each change check returns
+    # (max |Δ|, Σ rank over has_out) together, and the total enters the
+    # next round's plan as a literal — no per-round 1-row aggregate
+    # subtree + broadcast build. The literal is the identical double
+    # (same partial/final sum plan over the same materialized table;
+    # py4j round-trips doubles exactly).
     converge = tol is not None and iterations is None
     tot_lit: float | None = None
-    if converge:
-        tot_lit = damping * float(
-            ranks.where(F.col("has_out"))
-            .agg(F.sum("pagerank").alias("s"))
-            .first()["s"]
-            or 0.0
-        )
 
-    for k in range(start_iter + 1, limit + 1):
+    def step(ranks: DataFrame, k: int) -> DataFrame:
+        nonlocal tot_lit
         rank_lookup = ranks.select(F.col("id").alias("src"), "pagerank")
         if broadcast_ranks:
             gathered = en.join(F.broadcast(rank_lookup), "src")
@@ -205,23 +178,24 @@ def pagerank(
             (F.sum(F.col("pagerank") * F.col("wn")) * F.lit(damping)).alias("incoming")
         )
         if converge:
-            # dangling-mass total as a literal (computed by the previous
-            # iteration's fused delta action — see above)
-            uniform = (F.lit(float(n_vertices)) - F.lit(tot_lit)) / F.lit(
-                float(n_vertices)
-            )
+            if tot_lit is None:  # first round: the total over the starting ranks
+                tot_lit = damping * float(
+                    ranks.where(F.col("has_out")).agg(F.sum("pagerank").alias("s")).first()["s"]
+                    or 0.0
+                )
+            uniform = (F.lit(float(n_vertices)) - F.lit(tot_lit)) / F.lit(float(n_vertices))
+            base = ranks
         else:
-            # fixed-iteration mode stays fully lazy: the total is a
-            # broadcast 1-row agg in-plan over the cached rank table —
-            # zero driver actions in the loop body
+            # fixed-iteration mode has no driver action per round: the
+            # total is a broadcast 1-row agg in-plan over the rank table
             tot = ranks.where(F.col("has_out")).agg(
                 (F.sum("pagerank") * F.lit(damping)).alias("_tot")
             )
             uniform = (
                 F.lit(float(n_vertices)) - F.coalesce(F.col("_tot"), F.lit(0.0))
             ) / F.lit(float(n_vertices))
-        base = ranks if converge else ranks.crossJoin(F.broadcast(tot))
-        new_ranks = base.join(
+            base = ranks.crossJoin(F.broadcast(tot))
+        return base.join(
             contrib if broadcast_ranks else contrib.hint("shuffle_hash"),
             ranks.id == contrib.dst,
             "left",
@@ -229,57 +203,31 @@ def pagerank(
             "id",
             "has_out",
             (F.coalesce(F.col("incoming"), F.lit(0.0)) + uniform).alias("pagerank"),
-            *([F.col("pagerank").alias("_prev")] if converge else []),
+            *([F.col("pagerank").alias(PREV)] if converge else []),
         )
-        ckpt_due = checkpoint is not None and (k % checkpoint_every == 0 or k == limit)
-        if ckpt_due and not converge:
-            key = step_key(fp, "pagerank", params, k)
-            new_ranks = checkpoint.save(
-                new_ranks, key, metrics={"iteration": k, "history": history}
-            )
-        # cut lineage every iteration (lazily — materialized by the next
-        # action): the plan references ranks twice per round, so analysis
-        # time is exponential without truncation
-        new_ranks = new_ranks.localCheckpoint(eager=False)
 
-        if converge:
-            # ONE action per iteration: materializes the checkpoint and
-            # returns (max |Δrank|, next dangling-mass total) together —
-            # the old shape joined new vs old ranks in a second pass and
-            # ran the total as a separate in-plan aggregate + broadcast
-            row = new_ranks.agg(
-                F.max(F.abs(F.col("pagerank") - F.col("_prev"))).alias("d"),
-                F.sum(F.when(F.col("has_out"), F.col("pagerank"))).alias("s"),
-            ).first()
-            delta = row["d"]
-            tot_lit = damping * float(row["s"] or 0.0)
-            history.append({"iteration": k, "max_delta": delta})
-            ranks = new_ranks.drop("_prev")
-            if ckpt_due:
-                # write from the already-materialized local checkpoint
-                key = step_key(fp, "pagerank", params, k)
-                ranks = checkpoint.save(
-                    ranks, key, metrics={"iteration": k, "history": history}
-                )
-            if delta is not None and delta < tol:
-                break
-        else:
-            # fixed mode defers all execution to the caller's action
-            ranks = new_ranks
+    def delta(new: DataFrame, old: DataFrame) -> tuple[bool, dict]:
+        # ONE action per round: materializes the round and returns
+        # (max |Δrank|, next dangling-mass total) together
+        nonlocal tot_lit
+        row = new.agg(
+            F.max(F.abs(F.col("pagerank") - F.col(PREV))).alias("d"),
+            F.sum(F.when(F.col("has_out"), F.col("pagerank"))).alias("s"),
+        ).first()
+        tot_lit = damping * float(row["s"] or 0.0)
+        return row["d"] is not None and row["d"] < tol, {"max_delta": row["d"]}
 
-    # Unpersist unconditionally (r6 measured trade, recorded here):
-    # fixed mode returns a LAZY plan whose per-iteration checkpoints
-    # still reference en/vertices, so the caller's action recomputes
-    # the edge normalization once per iteration reference. Retaining
-    # the caches instead was measured ~20% faster per scaling leg —
-    # but it leaks session-lifetime cache entries sized like the edge
-    # table (CacheManager entries are not cleaned by reference GC), a
-    # real cost for any long-lived session calling fixed-mode pagerank
-    # repeatedly (the oracle-gate session runs dozens). The memory-
-    # safe release stays; converge mode has executed everything by
-    # now, so for it this is pure cleanup.
-    en.unpersist()
-    if hot is not None:
-        hot.unpersist()
-    vertices.unpersist()
+    limit = iterations if iterations is not None else max_iterations
+    ranks = run_supersteps(
+        vertices.select("id", "has_out", F.lit(1.0).alias("pagerank")),
+        step,
+        # an empty graph runs no rounds (the uniform share divides by |V|)
+        limit=limit if n_vertices else 0,
+        changed=delta if converge else None,
+        partition_by="id",
+        key=partial(step_key, input_fingerprint or "anon", "pagerank", params),
+        checkpoint=checkpoint,
+        checkpoint_every=checkpoint_every,
+        pinned=[en, vertices] + ([hot] if hot is not None else []),
+    )
     return ranks.select("id", "pagerank")

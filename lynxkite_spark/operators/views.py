@@ -133,6 +133,7 @@ def edges_for_vertices(
     )
     probe = incident.limit(max_edges + 1)
     if probe.count() > max_edges:
+        incident.unpersist()
         raise ValueError(
             f"edges_for_vertices: id set touches more than max_edges="
             f"{max_edges} edges (the reference's maxNumEdges abort, "

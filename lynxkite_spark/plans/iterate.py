@@ -1,0 +1,122 @@
+"""One superstep driver for the iterative vertex-state operators.
+
+Pregelix (VLDB 2014) runs each Pregel superstep as one dataflow plan:
+join the vertex state with its messages, group by, apply. PageRank,
+connected components, label propagation and k-core supply only that
+round body, a change predicate and an output projection; the harness
+around the plan is written here, once:
+
+  * resume — scan newest-first for a stored round, then materialize it;
+  * lineage cut — ``localCheckpoint(eager=False)`` every round (a round
+    references the previous state more than once, so an uncut chain
+    grows Catalyst analysis time exponentially, see ``materialize``);
+  * change check — the operator's ``changed(new, old)`` is the round's
+    one driver action; it returns a stop flag and a metrics record;
+  * checkpoint cadence — save every ``checkpoint_every`` rounds and at
+    the iteration cap, with the per-round records in the sidecar;
+  * cache release — every pinned cache is unpersisted on every exit,
+    a raising round included.
+
+The state returned never depends on the caches released here: it is
+a materialized local checkpoint or a checkpoint read-back.
+"""
+
+from __future__ import annotations
+
+from collections.abc import Callable, Iterable
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from lynxkite_spark.plans.checkpoint import CheckpointManager, materialize
+
+# The broadcast switch. At or below this many vertices the vertex-state
+# tables are broadcast into each round's joins, so the edge stream is
+# never exchanged; above it they are hash-built (``shuffle_hash``)
+# instead, because building a multi-million-row broadcast relation is a
+# serial driver-side step that caps scaling.
+BROADCAST_MAX_VERTICES = 200_000
+
+# A round may carry each vertex's previous value in this column, so its
+# change check is one scan of the new state instead of a join against
+# the old one. The driver drops it after the check: it reaches neither a
+# checkpoint nor the caller.
+PREV = "_prev"
+
+
+def broadcasts(n_vertices: int) -> bool:
+    """True when vertex state of ``n_vertices`` rows is broadcast."""
+    return n_vertices <= BROADCAST_MAX_VERTICES
+
+
+def changed_rows(col: str) -> Callable[[DataFrame, DataFrame], tuple[bool, dict]]:
+    """The ``changed`` callback of a round that carries ``PREV``: stop
+    when no vertex's ``col`` differs from it (one ``limit(1)`` scan)."""
+
+    def check(new: DataFrame, old: DataFrame) -> tuple[bool, dict]:
+        n = new.where(F.col(col) != F.col(PREV)).limit(1).count()
+        return n == 0, {"changed": n}
+
+    return check
+
+
+def run_supersteps(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    *,
+    limit: int,
+    changed: Callable[[DataFrame, DataFrame], tuple[bool, dict]] | None = None,
+    partition_by: str | None = None,
+    key: Callable[[int], str] | None = None,
+    checkpoint: CheckpointManager | None = None,
+    checkpoint_every: int = 10,
+    pinned: Iterable[DataFrame] = (),
+) -> DataFrame:
+    """Run ``state = step(state, k)`` for rounds ``k = 1..limit`` and
+    return the final state.
+
+    ``changed(new, old)`` runs after every round and returns
+    ``(stop, record)``; with ``changed=None`` every round runs and none
+    triggers an action. ``partition_by`` hash-partitions the starting
+    state (stored or initial) before it is materialized. With a
+    ``checkpoint``, round ``k`` is stored under ``key(k)`` and a rerun
+    resumes from the newest stored round. ``pinned`` caches are
+    unpersisted when the driver returns or raises.
+    """
+    try:
+        start, history = 0, []
+        if checkpoint is not None:
+            for k in range(limit, 0, -1):
+                stored = checkpoint.load(key(k))
+                if stored is not None:
+                    state, start = stored, k
+                    history = checkpoint.metrics(key(k))["metrics"].get("history", [])
+                    break
+        if partition_by is not None:
+            n_part = int(state.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+            state = state.repartition(n_part, partition_by)
+        state = materialize(state)
+        for k in range(start + 1, limit + 1):
+            new = step(state, k)
+            save = checkpoint is not None and (k % checkpoint_every == 0 or k == limit)
+            stop, record = False, {}
+            if changed is not None:
+                new = new.localCheckpoint(eager=False)  # materialized by the check
+                stop, record = changed(new, state)
+                if PREV in new.columns:
+                    new = new.drop(PREV)
+            history.append({"iteration": k, **record})
+            if save:
+                new = checkpoint.save(new, key(k), metrics={"iteration": k, "history": history})
+            if changed is None:
+                # no per-round action: the cut is lazy, except that the
+                # last round is materialized here (a save already wrote it)
+                # rather than left to the caller's action
+                new = new.localCheckpoint(eager=k == limit and not save)
+            state = new
+            if stop:
+                break
+        return state
+    finally:
+        for df in pinned:
+            df.unpersist()

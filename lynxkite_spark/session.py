@@ -21,6 +21,14 @@ ROWS_PER_PARTITION = 200_000
 HOT_KEY_THRESHOLD = 40_000
 
 
+def default_heap() -> str:
+    """About 60% of the host's memory in whole GiB (at least 1g): the
+    driver heap when ``SPARK_DRIVER_MEMORY`` is unset."""
+    with open("/proc/meminfo") as f:
+        kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{max(1, int(kib * 0.6) >> 20)}g"
+
+
 def get_spark(
     cores: int | str | None = None,
     shuffle_partitions: int | None = None,
@@ -30,8 +38,10 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     ``cores`` is an int for ``local[N]`` or a full master URL; defaults to
-    ``$SPARK_GRAFT_CPUS`` (falling back to ``local[*]``).
+    ``$SPARK_GRAFT_CPUS`` (falling back to ``local[*]``). The driver heap
+    is ``$SPARK_DRIVER_MEMORY``, else ``default_heap()``.
     """
+    heap = os.environ.get("SPARK_DRIVER_MEMORY") or default_heap()
     env_cores = os.environ.get("SPARK_GRAFT_CPUS")
     if cores is None:
         master = f"local[{env_cores}]" if env_cores else "local[*]"
@@ -56,7 +66,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", heap)
         # FIXED heap (-Xms == -Xmx): without it G1 uncommits idle regions
         # back to the OS after every concurrent cycle, and on a
         # virtualized host with free-page reporting (this sandbox is a
@@ -74,10 +84,7 @@ def get_spark(
         # remove the multi-second co-tenant stall windows that hit
         # random suite queries, so it stays scoped to the scaling legs
         # where its cost sits outside the timed window.)
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{os.environ.get('SPARK_DRIVER_MEMORY', '48g')}",
-        )
+        .config("spark.driver.extraJavaOptions", f"-Xms{heap}")
         # Broadcast threshold stays at Spark's default 10MB: every join that
         # SHOULD broadcast (dictionaries, hot-key subsets, small rank
         # tables) is hinted explicitly with F.broadcast(). A generous

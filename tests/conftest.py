@@ -5,5 +5,5 @@ from lynxkite_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cores=8, shuffle_partitions=8, app_name="lynxkite_spark_tests")
+    s = get_spark(app_name="lynxkite_spark_tests")
     yield s

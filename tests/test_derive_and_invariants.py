@@ -239,25 +239,26 @@ def test_lpa_and_cc_checkpoint_resume(spark, corpus, tmp_path):
     }
     assert resumed == full
 
-    cp2 = CheckpointManager(spark, str(tmp_path / "cc_ckpt"))
-    full_cc = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            g, algorithm="minlabel", max_iterations=8,
-            checkpoint=cp2, checkpoint_every=2, input_fingerprint=fp,
-        ).collect()
-    }
-    params_cc = {"algorithm": "minlabel", "max_iterations": 8}
-    assert cp2.exists(step_key(fp, "cc", params_cc, 2))
-    for k in range(8, 2, -1):
-        key = step_key(fp, "cc", params_cc, k)
-        if cp2.exists(key):
-            shutil.rmtree(str(tmp_path / "cc_ckpt" / key))
-    resumed_cc = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            g, algorithm="minlabel", max_iterations=8,
-            checkpoint=cp2, checkpoint_every=2, input_fingerprint=fp,
-        ).collect()
-    }
-    assert resumed_cc == full_cc
+    for algorithm in ("minlabel", "star"):
+        cp2 = CheckpointManager(spark, str(tmp_path / f"cc_ckpt_{algorithm}"))
+        full_cc = {
+            r["id"]: r["component"]
+            for r in connected_components(
+                g, algorithm=algorithm, max_iterations=8,
+                checkpoint=cp2, checkpoint_every=2, input_fingerprint=fp,
+            ).collect()
+        }
+        params_cc = {"algorithm": algorithm, "max_iterations": 8}
+        assert cp2.exists(step_key(fp, "cc", params_cc, 2))
+        for k in range(8, 2, -1):
+            key = step_key(fp, "cc", params_cc, k)
+            if cp2.exists(key):
+                shutil.rmtree(str(tmp_path / f"cc_ckpt_{algorithm}" / key))
+        resumed_cc = {
+            r["id"]: r["component"]
+            for r in connected_components(
+                g, algorithm=algorithm, max_iterations=8,
+                checkpoint=cp2, checkpoint_every=2, input_fingerprint=fp,
+            ).collect()
+        }
+        assert resumed_cc == full_cc

@@ -1,0 +1,144 @@
+"""The superstep driver (plans/iterate.py) and the exit-path guards:
+a raising round, an over-budget input and a failing checkpoint store
+leave session conf and the CacheManager as they found them."""
+
+import pytest
+from pyspark.sql import functions as F
+
+from lynxkite_spark.graph import Graph
+from lynxkite_spark.plans.checkpoint import CheckpointManager
+from lynxkite_spark.plans.iterate import run_supersteps
+
+
+def _conf(spark):
+    return {r["key"]: r["value"] for r in spark.sql("SET").collect()}
+
+
+def _cache_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _ring(spark, n=10):
+    edges = spark.createDataFrame([(i, (i + 1) % n) for i in range(n)], "src long, dst long")
+    return Graph(vertices=spark.range(n).select("id"), edges=edges)
+
+
+def _inc(df, k):
+    return df.select("id", (F.col("x") + 1).alias("x"))
+
+
+def test_raising_round_releases_pinned_and_leaves_conf(spark):
+    spark.catalog.clearCache()
+    before = _conf(spark)
+    pinned = spark.range(50).persist()
+    pinned.count()
+
+    def step(df, k):
+        if k == 2:
+            raise RuntimeError("round 2 failed")
+        return _inc(df, k)
+
+    with pytest.raises(RuntimeError, match="round 2"):
+        run_supersteps(spark.range(5).select("id", F.lit(0).alias("x")), step, limit=4, pinned=[pinned])
+    assert _cache_empty(spark)
+    assert _conf(spark) == before
+
+
+def test_checkpoint_cadence_history_and_resume(spark, tmp_path):
+    cp = CheckpointManager(spark, str(tmp_path / "ckpt"))
+    rounds = []
+
+    def step(df, k):
+        rounds.append(k)
+        return _inc(df, k)
+
+    def run():
+        return run_supersteps(
+            spark.range(3).select("id", F.lit(0).alias("x")),
+            step,
+            limit=5,
+            key=lambda k: f"inc-{k}",
+            checkpoint=cp,
+            checkpoint_every=2,
+        )
+
+    assert sorted(r["x"] for r in run().collect()) == [5, 5, 5]
+    # every second round and the cap
+    assert [k for k in range(1, 6) if cp.exists(f"inc-{k}")] == [2, 4, 5]
+    side = cp.metrics("inc-5")["metrics"]
+    assert side["iteration"] == 5
+    assert [h["iteration"] for h in side["history"]] == [1, 2, 3, 4, 5]
+
+    # a rerun resumes from the newest stored round and keeps its history
+    import shutil
+
+    shutil.rmtree(str(tmp_path / "ckpt" / "inc-5"))
+    rounds.clear()
+    assert sorted(r["x"] for r in run().collect()) == [5, 5, 5]
+    assert rounds == [5]
+    assert [h["iteration"] for h in cp.metrics("inc-5")["metrics"]["history"]] == [1, 2, 3, 4, 5]
+
+
+def test_change_check_stops_and_drops_prev(spark):
+    from lynxkite_spark.plans.iterate import PREV, changed_rows
+
+    def step(df, k):
+        # x climbs to 3 and stays there
+        return df.select("id", F.least(F.col("x") + 1, F.lit(3)).alias("x"), F.col("x").alias(PREV))
+
+    rounds = []
+
+    def changed(new, old):
+        rounds.append(1)
+        return changed_rows("x")(new, old)
+
+    out = run_supersteps(spark.range(4).select("id", F.lit(0).alias("x")), step, limit=10, changed=changed)
+    assert out.columns == ["id", "x"]
+    assert {r["x"] for r in out.collect()} == {3}
+    assert len(rounds) == 4  # three rounds that change, one that does not
+
+
+def test_operator_with_failing_store_releases_its_caches(spark, tmp_path):
+    from lynxkite_spark.operators.labelprop import label_propagation
+
+    class FailingStore(CheckpointManager):
+        def save(self, df, key, metrics=None):
+            raise OSError("store unavailable")
+
+    spark.catalog.clearCache()
+    before = _conf(spark)
+    with pytest.raises(OSError, match="store unavailable"):
+        label_propagation(
+            _ring(spark), max_iterations=3, checkpoint=FailingStore(spark, str(tmp_path)), checkpoint_every=1
+        )
+    assert _cache_empty(spark)
+    assert _conf(spark) == before
+
+
+def test_hyperball_restores_codegen_when_a_round_raises(spark, monkeypatch):
+    from lynxkite_spark.operators import hyperball as hb
+
+    real, calls = hb._estimates_wide, []
+
+    def fail_in_loop(*args, **kwargs):
+        # the first call is the pre-loop estimate; the second is round 1
+        calls.append(1)
+        if len(calls) > 1:
+            raise RuntimeError("round failed")
+        return real(*args, **kwargs)
+
+    key = "spark.sql.codegen.wholeStage"
+    before = spark.conf.get(key, "true")
+    monkeypatch.setattr(hb, "_estimates_wide", fail_in_loop)
+    with pytest.raises(RuntimeError, match="round failed"):
+        hb.hyperball(_ring(spark), max_distance=3, log2m=4)
+    assert spark.conf.get(key, "true") == before
+
+
+def test_edges_for_vertices_over_budget_leaves_no_cache(spark):
+    from lynxkite_spark.operators.views import edges_for_vertices
+
+    spark.catalog.clearCache()
+    with pytest.raises(ValueError, match="max_edges"):
+        edges_for_vertices(_ring(spark), [0, 1, 2, 3], max_edges=2)
+    assert _cache_empty(spark)

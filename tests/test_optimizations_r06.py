@@ -80,8 +80,9 @@ def test_gopher_keep_filter_not_pushed_below_metrics(spark, docs):
     assert kept > 0
 
 
-def test_labelprop_broadcast_path_matches_shuffle_path(spark):
+def test_labelprop_broadcast_path_matches_shuffle_path(spark, monkeypatch):
     from lynxkite_spark.operators.labelprop import label_propagation
+    from lynxkite_spark.plans import iterate
 
     edges = spark.createDataFrame(
         [(i, (i + 1) % 10) for i in range(10)] + [(20, 21), (21, 22)],
@@ -90,7 +91,8 @@ def test_labelprop_broadcast_path_matches_shuffle_path(spark):
     vertices = spark.range(23).select(F.col("id"))
     g = Graph(vertices=vertices, edges=edges)
     a = sorted(map(tuple, label_propagation(g, max_iterations=5).collect()))
-    b = sorted(map(tuple, label_propagation(g, max_iterations=5, broadcast_threshold=0).collect()))
+    monkeypatch.setattr(iterate, "BROADCAST_MAX_VERTICES", 0)
+    b = sorted(map(tuple, label_propagation(g, max_iterations=5).collect()))
     assert a == b
 
 

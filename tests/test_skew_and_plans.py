@@ -94,20 +94,17 @@ def test_dictionary_join_is_broadcast(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_pagerank_join_paths_equivalent(spark):
+def test_pagerank_join_paths_equivalent(spark, monkeypatch):
     """The broadcast / hybrid / shuffle-hash gather paths are pure
     execution-strategy choices: identical ranks from all three."""
     from lynxkite_spark.operators.generators import erdos_renyi
+    from lynxkite_spark.plans import iterate
 
     g = erdos_renyi(spark, n=400, avg_degree=8, seed=7)
-    r_bcast = {
-        r["id"]: r["pagerank"]
-        for r in pagerank(g, iterations=5, tol=None, broadcast_threshold=10**9).collect()
-    }
-    r_shuffle = {
-        r["id"]: r["pagerank"]
-        for r in pagerank(g, iterations=5, tol=None, broadcast_threshold=0).collect()
-    }
+    monkeypatch.setattr(iterate, "BROADCAST_MAX_VERTICES", 10**9)
+    r_bcast = {r["id"]: r["pagerank"] for r in pagerank(g, iterations=5, tol=None).collect()}
+    monkeypatch.setattr(iterate, "BROADCAST_MAX_VERTICES", 0)
+    r_shuffle = {r["id"]: r["pagerank"] for r in pagerank(g, iterations=5, tol=None).collect()}
     assert set(r_bcast) == set(r_shuffle)
     for k in r_bcast:
         assert r_bcast[k] == pytest.approx(r_shuffle[k], abs=1e-12)
