@@ -52,7 +52,7 @@ def get_instrumented_spark(cpus: int):
 def suite_queries(spark, sf_dir: str):
     """Yield (name, thunk) in the exact order bench.run_suite times them.
     Each thunk runs the identical action bench.py times."""
-    from bench import coorder_graph
+    from bench import coorder_graph, rows_digest
     from lynxkite_spark.corpus import synth_corpus
     from lynxkite_spark.derive import derive_repo_edges
     from lynxkite_spark.functions.curation import (
@@ -94,9 +94,9 @@ def suite_queries(spark, sf_dir: str):
     )
     yield (
         "q_connected_components",
-        lambda: connected_components(g_canon, algorithm="star").count(),
+        lambda: rows_digest(connected_components(g_canon, algorithm="star")),
     )
-    yield ("q_triangle_count", lambda: triangle_count(g_canon).count())
+    yield ("q_triangle_count", lambda: rows_digest(triangle_count(g_canon)))
     yield (
         "q_label_propagation",
         lambda: label_propagation(g_canon, max_iterations=10).count(),

@@ -207,32 +207,31 @@ def train_quality_classifier(
     building a 4096-element F.lit through py4j plus analyzing it
     dominated iteration wall (~3s/iter at 96 docs; ~0.6s/iter after).
     The labeled sample is featurized once and cached."""
-    # Right-size the cached sample's partitioning to its row count: a
-    # tiny labeled set parallelized over the session default (e.g. 96
-    # docs in 32 partitions of 3) pays ~parallelism Arrow-UDF task
-    # launches per iteration for no parallel work. ~10k docs/partition;
-    # gradients are exact integer tick sums, so the result is
-    # partitioning-invariant by construction (pytest-enforced).
-    n_docs = docs.count()
-    if n_docs == 0:
-        raise ValueError("train_quality_classifier: empty training set")
-    spark = docs.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ideal = max(1, min(n_part, (n_docs + 9_999) // 10_000))
-    feat = (
-        docs.select(
-            F.col(label_col).cast("double").alias("_y"),
-            hashed_ngram_buckets(
-                F.coalesce(F.col(text_col), F.lit("")), n_buckets, ns, portable
-            ).alias("_bk"),
-        )
-        .repartition(ideal)
-        .persist()
-    )
-    feat.count()
-    w = np.zeros(n_buckets, dtype=np.float64)
-    bias = 0.0
+    # Featurize and cache first, then count the cache: counting ``docs``
+    # would execute the raw input plan one extra time.
+    raw = feat = docs.select(
+        F.col(label_col).cast("double").alias("_y"),
+        hashed_ngram_buckets(
+            F.coalesce(F.col(text_col), F.lit("")), n_buckets, ns, portable
+        ).alias("_bk"),
+    ).persist()
     try:
+        n_docs = raw.count()
+        if n_docs == 0:
+            raise ValueError("train_quality_classifier: empty training set")
+        # Right-size the cached sample's partitioning to its row count: a
+        # tiny labeled set parallelized over the session default (e.g. 96
+        # docs in 32 partitions of 3) pays ~parallelism Arrow-UDF task
+        # launches per iteration for no parallel work. ~10k docs/partition;
+        # gradients are exact integer tick sums, so the result is
+        # partitioning-invariant by construction (pytest-enforced).
+        n_part = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        ideal = max(1, min(n_part, (n_docs + 9_999) // 10_000))
+        feat = raw.repartition(ideal).persist()
+        feat.count()
+        raw.unpersist()
+        w = np.zeros(n_buckets, dtype=np.float64)
+        bias = 0.0
         for _ in range(iterations):
             w_q = np.rint(w * QSCALE).astype(np.int64)
             b_q = int(np.rint(bias * QSCALE))
@@ -291,6 +290,7 @@ def train_quality_classifier(
             w = w - lr * grad / (QSCALE * float(n_docs))
             bias = bias - lr * grad_b / (QSCALE * float(n_docs))
     finally:
+        raw.unpersist()
         feat.unpersist()
     return {
         "weights_q": np.rint(w * QSCALE).astype(np.int64).tolist(),

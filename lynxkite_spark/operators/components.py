@@ -20,6 +20,10 @@ Two algorithms:
   * ``star`` (default) — Kiveris et al. "Connected Components in
     MapReduce and Beyond" alternating large-star/small-star contraction;
     O(log n) rounds regardless of diameter — the 100 TB-safe choice.
+    It stops at the first round whose edge set is a star forest: no
+    vertex is the leaf (``src``) of two edges and no leaf is also a
+    centre (``dst``). That set is a fixed point of the round, and each
+    centre is its component's minimum, so no confirming round is run.
 
 Both are integer-exact by construction (min/joins only, no float math).
 """
@@ -63,7 +67,6 @@ def _large_star(edges: DataFrame, broadcast_m: bool = False) -> DataFrame:
         sym.join(m, "src")
         .where(F.col("dst") > F.col("src"))
         .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .distinct()
     )
 
 
@@ -85,6 +88,23 @@ def _small_star(edges: DataFrame, broadcast_m: bool = False) -> DataFrame:
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
+
+
+def _star_forest(new: DataFrame, old: DataFrame) -> tuple[bool, dict]:
+    """The star round's ``changed`` check: stop when the small-star
+    output (oriented ``src > dst``) is a star forest — no vertex is the
+    leaf of more than one edge, and no leaf is also a centre. One
+    grouped scan; ``limit(1)`` ends it at the first offending vertex."""
+    roles = new.select(F.posexplode(F.array("src", "dst")).alias("pos", "v"))  # pos 0: leaf
+    n = (
+        roles.groupBy("v")
+        .agg(F.min("pos").alias("pos"), F.count(F.lit(1)).alias("ends"))
+        # a leaf with a second edge end: it has two centres, or is one
+        .where((F.col("pos") == 0) & (F.col("ends") > 1))
+        .limit(1)
+        .count()
+    )
+    return n == 0, {"not_star": n}
 
 
 def connected_components(
@@ -121,26 +141,13 @@ def connected_components(
         # its rank table — the contracted edge stream then never
         # shuffles for the relink joins, only for groupBy/distinct
         broadcast_m = broadcasts(graph.vertices.count())
-        edge_counts: list[int] = []
-
-        def stable(new: DataFrame, old: DataFrame) -> tuple[bool, dict]:
-            # converged when the edge set is stable (star graph reached):
-            # equal cardinality and no edge outside the old set
-            if not edge_counts:
-                edge_counts.append(old.count())
-            n = new.count()
-            stop = n == edge_counts[-1] and new.exceptAll(old).limit(1).count() == 0
-            edge_counts.append(n)
-            return stop, {"edges": n}
-
         # the state is the contracted edge set itself; star contraction
         # references it several times per round (plan growth, see
         # materialize), so the driver's per-round lineage cut matters
         e = run_supersteps(
             edges,
             lambda e, k: _small_star(_large_star(e, broadcast_m), broadcast_m),
-            changed=stable,
-            partition_by="src",
+            changed=_star_forest,
             **harness,
         )
         labels = (

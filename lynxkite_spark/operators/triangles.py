@@ -59,11 +59,7 @@ def triangle_count(graph: Graph, needs_both_directions: bool = False) -> DataFra
     BuildSegmentationOperations.scala:283-300). Vertices in no triangle
     get 0. Returns DataFrame[id, triangles: long]."""
     tri = enumerate_triangles(graph, needs_both_directions)
-    corners = (
-        tri.select(F.col("a").alias("id"))
-        .unionAll(tri.select("b"))
-        .unionAll(tri.select("c"))
-    )
+    corners = tri.select(F.explode(F.array("a", "b", "c")).alias("id"))
     counts = corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
     return (
         graph.vertices.select("id")

@@ -121,6 +121,29 @@ def test_components_long_path_star(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+def test_components_star_stops_at_first_star_forest(spark, tmp_path):
+    """Star CC stops in the round whose edge set (oriented src > dst) is
+    a star forest, without a second round to see that nothing changed."""
+    from lynxkite_spark.operators.components import _star_forest
+    from lynxkite_spark.plans.checkpoint import CheckpointManager, step_key
+
+    def stops(pairs):
+        e = spark.createDataFrame(pairs, "src long, dst long")
+        return _star_forest(e, e)[0]
+
+    assert stops([(1, 0), (2, 0), (4, 3), (5, 3)])  # two stars
+    assert not stops([(2, 0), (2, 1)])  # leaf 2 has two centres
+    assert not stops([(2, 1), (1, 0)])  # chain: leaf 2 -> centre 1 -> centre 0
+
+    g = graph_from_adjacency(spark, {0: [1, 2, 3]})  # already a star
+    cp = CheckpointManager(spark, str(tmp_path / "cc_star"))
+    got = connected_components(g, algorithm="star", checkpoint=cp, checkpoint_every=1, input_fingerprint="star")
+    assert {r["id"]: r["component"] for r in got.collect()} == {i: 0 for i in range(4)}
+    params = {"algorithm": "star", "max_iterations": 50}
+    assert not cp.exists(step_key("star", "cc", params, 2))
+    assert [h["iteration"] for h in cp.metrics(step_key("star", "cc", params, 1))["metrics"]["history"]] == [1]
+
+
 # ----------------------------------------------------------- Triangles
 
 

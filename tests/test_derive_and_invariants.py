@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from lynxkite_spark.corpus import synth_corpus, with_sha256
 from lynxkite_spark.derive import derive_file_edges, derive_repo_edges
-from lynxkite_spark.graph import Graph
+from lynxkite_spark.graph import Graph, graph_from_adjacency
 from lynxkite_spark.operators import connected_components, pagerank
 from lynxkite_spark.plans.checkpoint import CheckpointManager, step_key, table_fingerprint
 from lynxkite_spark.plans.snapshots import SnapshotRegistry, well_known_datasets
@@ -239,26 +239,30 @@ def test_lpa_and_cc_checkpoint_resume(spark, corpus, tmp_path):
     }
     assert resumed == full
 
-    for algorithm in ("minlabel", "star"):
+    # star CC finishes on this fixture after round 1 and stores nothing;
+    # its resume runs on a 64-long path, which takes several rounds
+    path = graph_from_adjacency(spark, {i: [i + 1] for i in range(63)})
+    for algorithm, cc_g, cc_fp in (("minlabel", g, fp), ("star", path, "path64")):
         cp2 = CheckpointManager(spark, str(tmp_path / f"cc_ckpt_{algorithm}"))
         full_cc = {
             r["id"]: r["component"]
             for r in connected_components(
-                g, algorithm=algorithm, max_iterations=8,
-                checkpoint=cp2, checkpoint_every=2, input_fingerprint=fp,
+                cc_g, algorithm=algorithm, max_iterations=8,
+                checkpoint=cp2, checkpoint_every=2, input_fingerprint=cc_fp,
             ).collect()
         }
         params_cc = {"algorithm": algorithm, "max_iterations": 8}
-        assert cp2.exists(step_key(fp, "cc", params_cc, 2))
+        assert cp2.exists(step_key(cc_fp, "cc", params_cc, 2))
         for k in range(8, 2, -1):
-            key = step_key(fp, "cc", params_cc, k)
+            key = step_key(cc_fp, "cc", params_cc, k)
             if cp2.exists(key):
                 shutil.rmtree(str(tmp_path / f"cc_ckpt_{algorithm}" / key))
         resumed_cc = {
             r["id"]: r["component"]
             for r in connected_components(
-                g, algorithm=algorithm, max_iterations=8,
-                checkpoint=cp2, checkpoint_every=2, input_fingerprint=fp,
+                cc_g, algorithm=algorithm, max_iterations=8,
+                checkpoint=cp2, checkpoint_every=2, input_fingerprint=cc_fp,
             ).collect()
         }
         assert resumed_cc == full_cc
+    assert full_cc == {i: 0 for i in range(64)}

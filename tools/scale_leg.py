@@ -98,33 +98,26 @@ def main() -> None:
     ap.add_argument("--control", action="store_true",
                     help="run the zero-engine-code Spark SQL control kernel")
     ap.add_argument("--heap", default=None,
-                    help="JVM heap for this leg (default: pair-constant, "
-                         "3g + 1.5g/core at the 8-core reference leg)")
+                    help="JVM heap for this leg (default: session.default_heap(), "
+                         "the same for every leg)")
     args = ap.parse_args()
 
-    # PAIR-CONSTANT HEAP: both legs of the N/4N comparison get the 4N
-    # leg's heap (15g at the 2/8 pair), so the efficiency ratio isolates
-    # CPU scaling.  The earlier proportional formula (3g + 1.5g/core →
-    # 6g at 2 cores) starved the small leg: the cached 32M-edge probe
-    # and PageRank working set are the SAME size at both levels, and at
-    # 6g the 2-core leg evicts/spills what the 15g 8-core leg holds in
-    # memory — measured same-hour on idle cores 483k eps @6g vs
-    # 631k eps @15g, which manufactured a physically-suspicious
-    # superlinear 2→8 efficiency of 1.15.  (On a real cluster the 4N
-    # fleet has 4N memory as well as 4N cores, so same-size-data
-    # superlinearity is a genuine effect — but the north rule's
-    # criterion is CPU scaling, and the constant-heap ratio is the
-    # conservative, credible estimate: 0.83 same-hour.)  Legs above 8
-    # cores keep the proportional formula (they need more headroom for
-    # 32 concurrent tasks and sit outside the 2→8 ratio).
-    heap = args.heap or f"{3 + int(1.5 * max(args.cores, 8))}g"
+    # PAIR-CONSTANT HEAP: both legs of the N/4N comparison get the same
+    # heap, so the efficiency ratio isolates CPU scaling. A heap that
+    # grew with the core count starved the small leg: the cached probe
+    # and the PageRank working set are the SAME size at both levels, so
+    # the small leg spilled what the large one held in memory, which
+    # manufactured a superlinear efficiency. The heap is sized to the
+    # host (``default_heap()``), never above its memory: the heap is
+    # pre-touched below, so an oversized one fails at JVM start.
+    from lynxkite_spark.session import default_heap, get_spark  # noqa: E402
+
+    heap = args.heap or default_heap()
     os.environ["SPARK_DRIVER_MEMORY"] = heap
     # every thread pool inside the JVM sizes to the leg's core count
     apc = f"-XX:ActiveProcessorCount={args.cores}"
     prev = os.environ.get("SPARK_SUBMIT_OPTS", "")
     os.environ["SPARK_SUBMIT_OPTS"] = f"{prev} {apc}".strip()
-
-    from lynxkite_spark.session import get_spark  # noqa: E402
 
     spark = get_spark(
         cores=args.cores,
