@@ -25,11 +25,15 @@ k ≥ n every vertex is a root and the result is exact Brandes.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from lynxkite_spark.graph import Graph
+from lynxkite_spark.plans.iterate import run_supersteps
 
 
 def _sample_roots(vertices: DataFrame, k: int, seed: int) -> DataFrame:
@@ -44,28 +48,76 @@ def _sample_roots(vertices: DataFrame, k: int, seed: int) -> DataFrame:
 def _forward_bfs(
     e: DataFrame, roots: DataFrame, max_depth: int
 ) -> tuple[DataFrame, int]:
-    """Multi-root BFS with path counting. Returns (state, reached_depth);
-    state = DataFrame[root, id, d, sigma] for every reached (root, id)."""
-    frontier = roots.select(
-        "root", F.col("root").alias("id"), F.lit(0).alias("d"), F.lit(1.0).alias("sigma")
-    ).localCheckpoint(eager=True)
-    state = frontier
-    depth = 0
-    for d in range(1, max_depth + 1):
+    """Multi-root BFS with path counting on the superstep driver.
+    Returns (state, reached_depth); state = DataFrame[root, id, d, sigma]
+    for every reached (root, id). Round k expands the depth-(k-1) rows,
+    drops the (root, id) pairs already reached and unions the rest in;
+    it stops at the first round that reaches nothing."""
+    depth, stopped_at = 0, None
+
+    def step(state: DataFrame, k: int) -> DataFrame:
+        frontier = state.where(F.col("d") == k - 1)
         nxt = (
             frontier.join(e, frontier.id == e.src)
             .groupBy("root", F.col("dst").alias("nid"))
             .agg(F.sum("sigma").alias("sigma"))
-            .select("root", F.col("nid").alias("id"), F.lit(d).alias("d"), "sigma")
+            .select("root", F.col("nid").alias("id"), F.lit(k).alias("d"), "sigma")
         )
-        frontier = nxt.join(
-            state.select("root", "id"), ["root", "id"], "left_anti"
-        ).localCheckpoint(eager=True)
-        if frontier.limit(1).count() == 0:
-            break
-        depth = d
-        state = state.unionByName(frontier).localCheckpoint(eager=True)
-    return state, depth
+        return state.unionByName(nxt.join(state.select("root", "id"), ["root", "id"], "left_anti"))
+
+    def reached(new: DataFrame, old: DataFrame) -> tuple[bool, dict]:
+        nonlocal depth, stopped_at
+        if new.where(F.col("d") == depth + 1).limit(1).count() == 0:
+            # the round only appended an empty frontier: keep the state
+            # before it, whose size estimate has one join factor fewer
+            stopped_at = old
+            return True, {"depth": depth}
+        depth += 1
+        return False, {"depth": depth}
+
+    state = run_supersteps(
+        roots.select("root", F.col("root").alias("id"), F.lit(0).alias("d"), F.lit(1.0).alias("sigma")),
+        step,
+        limit=max_depth,
+        changed=reached,
+    )
+    return (state if stopped_at is None else stopped_at), depth
+
+
+@contextmanager
+def _sampled_bfs(
+    graph: Graph, k: int, max_depth: int, seed: int, roots: DataFrame | None
+) -> Iterator[tuple[DataFrame, DataFrame, int, int, DataFrame, int]]:
+    """The prologue betweenness and closeness share: symmetrize the
+    edges, pin them and the vertex ids, count |V|, sample (or take) the
+    roots and run the forward BFS from them. Yields (e, vertices, n,
+    k_eff, state, depth); both pinned tables are released on exit."""
+    # NOT pre-partitioned (tried in r6, reverted): pinning src- and
+    # dst-partitioned copies saved the per-hop exchanges of the edge
+    # table but disabled AQE's coalescing of the frontier-join stages,
+    # which made the σ-sum partial aggregation compress worse — net
+    # shuffle GREW (330→373 MB at sf0.1) and walls were flat-to-worse
+    # across repeated A/B runs. Same effect as hyperball's merge join.
+    e0 = graph.edges.select("src", "dst").where(F.col("src") != F.col("dst"))
+    e = (
+        e0.unionByName(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    vertices = graph.vertices.select("id").persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        n = vertices.count()
+        if roots is None:
+            k_eff = min(k, n)
+            roots = _sample_roots(vertices, k_eff, seed)
+        else:
+            roots = roots.select(F.col(roots.columns[0]).alias("root"))
+            k_eff = roots.count()
+        state, depth = _forward_bfs(e, roots.localCheckpoint(eager=True), max_depth)
+        yield e, vertices, n, k_eff, state, depth
+    finally:
+        e.unpersist()
+        vertices.unpersist()
 
 
 def betweenness_centrality(
@@ -80,64 +132,41 @@ def betweenness_centrality(
     (NetworKit's Betweenness convention: directed=false). Returns
     DataFrame[id, betweenness] — δ-dependencies summed over k roots,
     scaled by n/k (exact when k ≥ n)."""
-    # NOT pre-partitioned (tried in r6, reverted): pinning src- and
-    # dst-partitioned copies saved the per-hop exchanges of the edge
-    # table but disabled AQE's coalescing of the frontier-join stages,
-    # which made the σ-sum partial aggregation compress worse — net
-    # shuffle GREW (330→373 MB at sf0.1) and walls were flat-to-worse
-    # across repeated A/B runs. Same effect as hyperball's merge join.
-    e0 = graph.edges.select("src", "dst").where(F.col("src") != F.col("dst"))
-    e = (
-        e0.unionByName(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    vertices = graph.vertices.select("id").persist(StorageLevel.MEMORY_AND_DISK)
-    n = vertices.count()
-    if roots is None:
-        k_eff = min(k, n)
-        roots = _sample_roots(vertices, k_eff, seed)
-    else:
-        roots = roots.select(F.col(roots.columns[0]).alias("root"))
-        k_eff = roots.count()
-    roots = roots.localCheckpoint(eager=True)
-    state, depth = _forward_bfs(e, roots, max_depth)
-    state = state.persist(StorageLevel.MEMORY_AND_DISK)
-
-    # backward accumulation, deepest level first; delta starts at 0
-    delta = state.select("root", "id", "d", "sigma", F.lit(0.0).alias("delta"))
-    delta = delta.localCheckpoint(eager=True)
-    for d in range(depth - 1, -1, -1):
-        succ = delta.where(F.col("d") == d + 1).select(
-            "root",
-            F.col("id").alias("dst"),
-            F.col("sigma").alias("sigma_w"),
-            F.col("delta").alias("delta_w"),
-        )
-        # v at depth d contributes along v→w edges to w at depth d+1
-        contrib = (
-            succ.join(e, "dst")
-            .groupBy("root", F.col("src").alias("id"))
-            .agg(
-                F.sum((F.lit(1.0) + F.col("delta_w")) / F.col("sigma_w")).alias("_c")
-            )
-        )
-        delta = (
-            delta.join(contrib.hint("shuffle_hash"), ["root", "id"], "left")
-            .select(
+    with _sampled_bfs(graph, k, max_depth, seed, roots) as (e, vertices, n, k_eff, state, depth):
+        # backward accumulation, deepest level first; delta starts at 0
+        delta = state.select("root", "id", "d", "sigma", F.lit(0.0).alias("delta"))
+        delta = delta.localCheckpoint(eager=True)
+        for d in range(depth - 1, -1, -1):
+            succ = delta.where(F.col("d") == d + 1).select(
                 "root",
-                "id",
-                "d",
-                "sigma",
-                F.when(
-                    F.col("d") == d,
-                    F.col("delta") + F.col("sigma") * F.coalesce("_c", F.lit(0.0)),
-                )
-                .otherwise(F.col("delta"))
-                .alias("delta"),
+                F.col("id").alias("dst"),
+                F.col("sigma").alias("sigma_w"),
+                F.col("delta").alias("delta_w"),
             )
-            .localCheckpoint(eager=True)
-        )
+            # v at depth d contributes along v→w edges to w at depth d+1
+            contrib = (
+                succ.join(e, "dst")
+                .groupBy("root", F.col("src").alias("id"))
+                .agg(
+                    F.sum((F.lit(1.0) + F.col("delta_w")) / F.col("sigma_w")).alias("_c")
+                )
+            )
+            delta = (
+                delta.join(contrib.hint("shuffle_hash"), ["root", "id"], "left")
+                .select(
+                    "root",
+                    "id",
+                    "d",
+                    "sigma",
+                    F.when(
+                        F.col("d") == d,
+                        F.col("delta") + F.col("sigma") * F.coalesce("_c", F.lit(0.0)),
+                    )
+                    .otherwise(F.col("delta"))
+                    .alias("delta"),
+                )
+                .localCheckpoint(eager=True)
+            )
     dep = (
         delta.where(F.col("d") > 0)
         .groupBy("id")
@@ -146,15 +175,13 @@ def betweenness_centrality(
     scale = float(n) / float(k_eff) if k_eff else 0.0
     if normalized and n > 2:
         scale /= (n - 1) * (n - 2)
-    out = (
+    return (
         vertices.join(dep, "id", "left")
         .select(
             "id",
             (F.coalesce("_dep", F.lit(0.0)) * F.lit(scale)).alias("betweenness"),
         )
     )
-    e.unpersist()
-    return out
 
 
 def closeness_centrality(
@@ -169,37 +196,14 @@ def closeness_centrality(
     over the sampled roots that reach v (undirected graph: d(r,v) =
     d(v,r)). Exact harmonic-free NetworKit "Closeness" convention;
     unreachable vertices get 0."""
-    e0 = graph.edges.select("src", "dst").where(F.col("src") != F.col("dst"))
-    e = (
-        e0.unionByName(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    vertices = graph.vertices.select("id").persist(StorageLevel.MEMORY_AND_DISK)
-    n = vertices.count()
-    if roots is None:
-        k_eff = min(k, n)
-        roots = _sample_roots(vertices, k_eff, seed)
-    else:
-        roots = roots.select(F.col(roots.columns[0]).alias("root"))
-        k_eff = roots.count()
-    roots = roots.localCheckpoint(eager=True)
-    state, _ = _forward_bfs(e, roots, max_depth)
-    sums = state.where(F.col("d") > 0).groupBy("id").agg(
-        F.sum("d").alias("sum_d")
-    )
-    out = (
-        vertices.join(sums, "id", "left")
-        .select(
+    with _sampled_bfs(graph, k, max_depth, seed, roots) as (_, vertices, n, k_eff, state, _):
+        sums = state.where(F.col("d") > 0).groupBy("id").agg(F.sum("d").alias("sum_d"))
+        return vertices.join(sums, "id", "left").select(
             "id",
             F.when(
                 F.coalesce("sum_d", F.lit(0)) > 0,
-                F.lit(float(n - 1))
-                / (F.lit(float(n) / float(k_eff)) * F.col("sum_d")),
+                F.lit(float(n - 1)) / (F.lit(float(n) / float(k_eff)) * F.col("sum_d")),
             )
             .otherwise(F.lit(0.0))
             .alias("closeness"),
         )
-    )
-    e.unpersist()
-    return out

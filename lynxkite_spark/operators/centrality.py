@@ -10,12 +10,37 @@ gather-scatter loops — same shape as PageRank (SURVEY.md §2.2 notes
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from lynxkite_spark.graph import Graph
-from lynxkite_spark.plans.iterate import broadcasts
+from lynxkite_spark.operators.betweenness import _forward_bfs
+from lynxkite_spark.plans.iterate import broadcasts, run_supersteps
+
+
+def _gather(e: DataFrame, x: DataFrame, small: bool) -> DataFrame:
+    """A·x as DataFrame[dst, ax]: the (weighted) sum of ``x`` over each
+    vertex's in-edges. Broadcast only truly small state: building a
+    broadcast relation is a serial driver step per round (see
+    pagerank.py)."""
+    lookup = x.select(F.col("id").alias("src"), "x")
+    gathered = e.join(F.broadcast(lookup) if small else lookup, "src")
+    return gathered.groupBy("dst").agg(F.sum(F.col("x") * F.col("weight")).alias("ax"))
+
+
+def _l1_norm(x: DataFrame) -> DataFrame:
+    """One row [n1]: ‖x‖₁ over column ``x``."""
+    return x.agg(F.sum(F.abs(F.col("x"))).alias("n1"))
+
+
+def _over_n1(value: Column) -> Column:
+    return F.when(F.col("n1") > 0, value / F.col("n1")).otherwise(F.lit(0.0))
+
+
+def _l1_normalized(x: DataFrame) -> DataFrame:
+    """DataFrame[id, x] scaled to ‖x‖₁ = 1, or 0 everywhere when ‖x‖₁ = 0."""
+    return x.crossJoin(F.broadcast(_l1_norm(x))).select("id", _over_n1(F.col("x")).alias("x"))
 
 
 def eigenvector_centrality(
@@ -28,50 +53,45 @@ def eigenvector_centrality(
     returns DataFrame[id, eigenvector] normalized to sum 1. Vertices with
     no in-edges converge to 0."""
     g = graph.with_weight()
-    spark = g.vertices.sparkSession
     e = g.edges.select("src", "dst", "weight").persist(StorageLevel.MEMORY_AND_DISK)
     vertices = g.vertices.select("id").persist(StorageLevel.MEMORY_AND_DISK)
     n = vertices.count()
-    if n == 0:
-        return vertices.withColumn("eigenvector", F.lit(0.0))
-    x = vertices.select("id", F.lit(1.0 / n).alias("x")).localCheckpoint(eager=False)
-    # broadcast only truly small state: building a broadcast relation is a
-    # serial driver step per iteration (see pagerank.py)
     small = broadcasts(n)
-    limit = iterations if iterations is not None else max_iterations
-    for k in range(limit):
-        lookup = x.select(F.col("id").alias("src"), "x")
-        gathered = e.join(F.broadcast(lookup) if small else lookup, "src")
-        ax = gathered.groupBy("dst").agg(F.sum(F.col("x") * F.col("weight")).alias("ax"))
-        ax = ax.persist(StorageLevel.MEMORY_AND_DISK)
-        norm = ax.agg(F.sum(F.abs(F.col("ax"))).alias("n1"))
-        new_x = (
-            vertices.crossJoin(F.broadcast(norm))
+
+    def step(x: DataFrame, k: int) -> DataFrame:
+        # The state is the iterate before its normalization, and
+        # A·(x/‖x‖₁) = (A·x)/‖x‖₁: the norm is read off the materialized
+        # state, so A·x has one reference and the gather runs once (AQE
+        # reuses no exchange above a cached scan, so a second reference
+        # would run it again). Built on the pinned vertex table: a round
+        # that joins the state with its own derivative squares
+        # Catalyst's size estimate every round.
+        ax = _gather(e, x, small)
+        return (
+            vertices.crossJoin(F.broadcast(_l1_norm(x)))
             .join(ax, vertices.id == ax.dst, "left")
-            .select(
-                "id",
-                F.when(F.col("n1") > 0, F.coalesce(F.col("ax"), F.lit(0.0)) / F.col("n1"))
-                .otherwise(F.lit(0.0))
-                .alias("x"),
-            )
-            .localCheckpoint(eager=False)
+            .select("id", _over_n1(F.coalesce(F.col("ax"), F.lit(0.0))).alias("x"))
         )
-        if iterations is None:
-            delta = (
-                new_x.alias("n")
-                .join((F.broadcast(x) if small else x).alias("o"), "id")
-                .agg(F.max(F.abs(F.col("n.x") - F.col("o.x"))).alias("d"))
-                .first()["d"]
-            )
-            ax.unpersist()
-            x = new_x
-            if delta is not None and delta < tol:
-                break
-        else:
-            x = new_x
-    e.unpersist()
-    vertices.unpersist()
-    return x.select("id", F.col("x").alias("eigenvector"))
+
+    def delta(new: DataFrame, old: DataFrame) -> tuple[bool, dict]:
+        x_old = _l1_normalized(old)
+        d = (
+            _l1_normalized(new).alias("n")
+            .join((F.broadcast(x_old) if small else x_old).alias("o"), "id")
+            .agg(F.max(F.abs(F.col("n.x") - F.col("o.x"))).alias("d"))
+            .first()["d"]
+        )
+        return d is not None and d < tol, {"max_delta": d}
+
+    limit = iterations if iterations is not None else max_iterations
+    x = run_supersteps(
+        vertices.select("id", F.lit(1.0).alias("x")),  # normalizes to 1/n
+        step,
+        limit=limit if n else 0,  # an empty graph runs no rounds
+        changed=delta if iterations is None else None,
+        pinned=[e, vertices],
+    )
+    return _l1_normalized(x).select("id", F.col("x").alias("eigenvector"))
 
 
 def katz_centrality(
@@ -83,28 +103,19 @@ def katz_centrality(
     """Katz: x' = α·Aᵀx + β, fixed iterations (converges for
     α < 1/λ_max). Returns DataFrame[id, katz]."""
     g = graph.with_weight()
-    spark = g.vertices.sparkSession
     e = g.edges.select("src", "dst", "weight").persist(StorageLevel.MEMORY_AND_DISK)
     vertices = g.vertices.select("id").persist(StorageLevel.MEMORY_AND_DISK)
-    n = vertices.count()
-    # broadcast only truly small state: building a broadcast relation is a
-    # serial driver step per iteration (see pagerank.py)
-    small = broadcasts(n)
-    x = vertices.select("id", F.lit(beta).alias("x")).localCheckpoint(eager=False)
-    for _ in range(iterations):
-        lookup = x.select(F.col("id").alias("src"), "x")
-        gathered = e.join(F.broadcast(lookup) if small else lookup, "src")
-        ax = gathered.groupBy("dst").agg(F.sum(F.col("x") * F.col("weight")).alias("ax"))
-        x = (
-            vertices.join(ax, vertices.id == ax.dst, "left")
-            .select(
-                "id",
-                (F.lit(alpha) * F.coalesce(F.col("ax"), F.lit(0.0)) + F.lit(beta)).alias("x"),
-            )
-            .localCheckpoint(eager=False)
+    small = broadcasts(vertices.count())
+
+    def step(x: DataFrame, k: int) -> DataFrame:
+        ax = _gather(e, x, small)
+        return vertices.join(ax, vertices.id == ax.dst, "left").select(
+            "id", (F.lit(alpha) * F.coalesce(F.col("ax"), F.lit(0.0)) + F.lit(beta)).alias("x")
         )
-    e.unpersist()
-    vertices.unpersist()
+
+    x = run_supersteps(
+        vertices.select("id", F.lit(beta).alias("x")), step, limit=iterations, pinned=[e, vertices]
+    )
     return x.select("id", F.col("x").alias("katz"))
 
 
@@ -114,6 +125,8 @@ def _reached(graph: Graph, max_distance: int) -> DataFrame:
     direction (so grouping by ``v`` measures the *coreachable* set, the
     orientation the reference's HyperBall uses,
     /root/reference/app/.../graph_operations/HyperBallCentrality.scala:110+).
+    It is betweenness' multi-root BFS with every vertex a root, over the
+    directed, deduplicated edges.
 
     NOTE: exact all-pairs state is O(n²) worst case — this is the
     small-graph path (the reference's equivalent runs in NetworKit /
@@ -125,25 +138,11 @@ def _reached(graph: Graph, max_distance: int) -> DataFrame:
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    reached = graph.vertices.select(
-        F.col("id").alias("root"), F.col("id").alias("v"), F.lit(0).alias("d")
-    ).localCheckpoint(eager=False)
-    frontier = reached
-    for d in range(1, max_distance + 1):
-        nxt = (
-            frontier.join(e, frontier.v == e.src)
-            .select("root", F.col("dst").alias("v"), F.lit(d).alias("d"))
-            .distinct()
-        )
-        frontier = (
-            nxt.join(reached.select("root", "v"), ["root", "v"], "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        if frontier.limit(1).count() == 0:
-            break
-        reached = reached.unionByName(frontier).localCheckpoint(eager=False)
-    e.unpersist()
-    return reached
+    try:
+        state, _ = _forward_bfs(e, graph.vertices.select(F.col("id").alias("root")), max_distance)
+    finally:
+        e.unpersist()
+    return state.select("root", F.col("id").alias("v"), "d")
 
 
 def harmonic_centrality(

@@ -1,7 +1,8 @@
 """HyperBall: HLL-sketch neighborhood functions and the centralities
 built on them — the 100 TB path for harmonic / Lin / average-distance
-(replacing the exact all-pairs BFS in centrality.py, which is the
-small-graph path).
+(replacing the exact all-pairs BFS ``centrality._reached`` — the
+multi-root BFS of ``betweenness._forward_bfs`` with every vertex a
+root — which is the small-graph path).
 
 Reference: /root/reference/app/com/lynxanalytics/biggraph/graph_operations/
 HyperBallCentrality.scala (HLL counters merged along edges per round,
@@ -152,7 +153,7 @@ def hyperball(
 ) -> DataFrame:
     """Run ``max_distance`` HyperBall rounds along edge direction
     (each vertex's ball accumulates the vertices that can REACH it —
-    the coreachable orientation centrality.py._reached uses).
+    the coreachable orientation of the exact ``centrality._reached``).
 
     Returns DataFrame[id, size, harmonic, sum_d] — approximate
     |coreachable ∩ ≤max_distance hops|, Σ 1/d and Σ d — or, with

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from lynxkite_spark.graph import Graph
+from lynxkite_spark.plans.iterate import run_supersteps
 
 
 def shortest_path(
@@ -27,30 +28,31 @@ def shortest_path(
     output attribute is partial — unreachable vertices stay undefined)."""
     g = graph.with_weight()
     e = g.edges.select("src", "dst", "weight" if weighted else F.lit(1.0).alias("weight"))
-    from lynxkite_spark.plans.checkpoint import materialize
-
     e = e.persist(StorageLevel.MEMORY_AND_DISK)
-    dist = materialize(sources.select("id", F.col("distance").cast("double")))
-    state = dist.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("distance").alias("s")
-    ).first()
-    for it in range(max_iterations):
+
+    def step(dist: DataFrame, k: int) -> DataFrame:
         relaxed = (
             e.join(dist.hint("shuffle_hash"), e.src == dist.id)
             .select(F.col("dst").alias("id"), (F.col("distance") + F.col("weight")).alias("distance"))
         )
-        new_dist = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("distance").alias("distance"))
-            .localCheckpoint(eager=False)  # materialized by the state check
-        )
-        new_state = new_dist.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("distance").alias("s")
-        ).first()
-        dist = new_dist
-        if (new_state["n"], new_state["s"]) == (state["n"], state["s"]):
-            break
-        state = new_state
-    e.unpersist()
-    return dist
+        return dist.unionByName(relaxed).groupBy("id").agg(F.min("distance").alias("distance"))
+
+    def signature(dist: DataFrame) -> tuple:
+        return tuple(dist.agg(F.count(F.lit(1)), F.sum("distance")).first())
+
+    last: tuple | None = None
+
+    def unchanged(new: DataFrame, old: DataFrame) -> tuple[bool, dict]:
+        # the starting state's signature is taken once, on the first call
+        nonlocal last
+        before = last if last is not None else signature(old)
+        last = signature(new)
+        return last == before, {"count": last[0], "sum": last[1]}
+
+    return run_supersteps(
+        sources.select("id", F.col("distance").cast("double")),
+        step,
+        limit=max_iterations,
+        changed=unchanged,
+        pinned=[e],
+    )

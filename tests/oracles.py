@@ -177,3 +177,52 @@ def closeness_oracle(
         tot = sum(d for v, d in dist.items() if d > 0)
         out[s] = (n - 1) / tot if tot > 0 else 0.0
     return out
+
+
+def eigenvector_oracle(
+    vertices: list[int], edges: list[tuple[int, int, float]], iterations: int
+) -> dict[int, float]:
+    """``iterations`` rounds of power iteration x' = A·x / ‖A·x‖₁ from
+    the uniform vector; 0 everywhere once A·x vanishes."""
+    x = {v: 1.0 / len(vertices) for v in vertices}
+    for _ in range(iterations):
+        ax: dict[int, float] = defaultdict(float)
+        for s, d, w in edges:
+            ax[d] += x[s] * w
+        n1 = sum(abs(a) for a in ax.values())
+        x = {v: ax.get(v, 0.0) / n1 if n1 > 0 else 0.0 for v in vertices}
+    return x
+
+
+def katz_oracle(
+    vertices: list[int],
+    edges: list[tuple[int, int, float]],
+    alpha: float,
+    beta: float,
+    iterations: int,
+) -> dict[int, float]:
+    """The Katz recurrence x' = α·Aᵀx + β from x = β."""
+    x = {v: beta for v in vertices}
+    for _ in range(iterations):
+        ax: dict[int, float] = defaultdict(float)
+        for s, d, w in edges:
+            ax[d] += x[s] * w
+        x = {v: alpha * ax.get(v, 0.0) + beta for v in vertices}
+    return x
+
+
+def bellman_ford_oracle(
+    edges: list[tuple[int, int, float]], sources: dict[int, float]
+) -> dict[int, float]:
+    """Shortest distances from the starting ``sources`` along edge
+    direction, relaxed until nothing changes; reached vertices only
+    (ShortestPath.scala's partial output)."""
+    dist = dict(sources)
+    changed = True
+    while changed:
+        changed = False
+        for s, d, w in edges:
+            if s in dist and dist[s] + w < dist.get(d, float("inf")):
+                dist[d] = dist[s] + w
+                changed = True
+    return dist

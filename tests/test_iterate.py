@@ -1,11 +1,15 @@
 """The superstep driver (plans/iterate.py) and the exit-path guards:
 a raising round, an over-budget input and a failing checkpoint store
-leave session conf and the CacheManager as they found them."""
+leave session conf and the CacheManager as they found them, and so
+does every operator that runs on the driver."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from lynxkite_spark.graph import Graph
+from lynxkite_spark.operators.betweenness import betweenness_centrality, closeness_centrality
+from lynxkite_spark.operators.centrality import eigenvector_centrality, harmonic_centrality, katz_centrality
+from lynxkite_spark.operators.shortest_path import shortest_path
 from lynxkite_spark.plans.checkpoint import CheckpointManager
 from lynxkite_spark.plans.iterate import run_supersteps
 
@@ -141,4 +145,23 @@ def test_edges_for_vertices_over_budget_leaves_no_cache(spark):
     spark.catalog.clearCache()
     with pytest.raises(ValueError, match="max_edges"):
         edges_for_vertices(_ring(spark), [0, 1, 2, 3], max_edges=2)
+    assert _cache_empty(spark)
+
+
+_CALLS = {
+    "eigenvector_tol": lambda g, s: eigenvector_centrality(g),
+    "eigenvector_iterations": lambda g, s: eigenvector_centrality(g, iterations=5),
+    "eigenvector_empty": lambda g, s: eigenvector_centrality(Graph(vertices=g.vertices.limit(0), edges=g.edges.limit(0))),
+    "katz": lambda g, s: katz_centrality(g, iterations=5),
+    "shortest_path": lambda g, s: shortest_path(g, s.createDataFrame([(0, 0.0)], "id long, distance double")),
+    "harmonic": lambda g, s: harmonic_centrality(g, max_distance=3),
+    "betweenness": lambda g, s: betweenness_centrality(g, k=4, max_depth=4),
+    "closeness": lambda g, s: closeness_centrality(g, k=4, max_depth=4),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_CALLS))
+def test_operator_releases_every_cache_it_pins(spark, name):
+    spark.catalog.clearCache()
+    _CALLS[name](_ring(spark), spark).collect()
     assert _cache_empty(spark)
