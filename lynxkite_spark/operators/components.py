@@ -94,14 +94,15 @@ def _star_forest(new: DataFrame, old: DataFrame) -> tuple[bool, dict]:
     """The star round's ``changed`` check: stop when the small-star
     output (oriented ``src > dst``) is a star forest — no vertex is the
     leaf of more than one edge, and no leaf is also a centre. One
-    grouped scan; ``limit(1)`` ends it at the first offending vertex."""
+    grouped scan that counts every offending leaf: it fills the round's
+    local checkpoint, which reads every edge anyway, and takes no
+    ``limit``, whose generated code is new on every call."""
     roles = new.select(F.posexplode(F.array("src", "dst")).alias("pos", "v"))  # pos 0: leaf
     n = (
         roles.groupBy("v")
         .agg(F.min("pos").alias("pos"), F.count(F.lit(1)).alias("ends"))
         # a leaf with a second edge end: it has two centres, or is one
         .where((F.col("pos") == 0) & (F.col("ends") > 1))
-        .limit(1)
         .count()
     )
     return n == 0, {"not_star": n}

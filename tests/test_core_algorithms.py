@@ -127,13 +127,15 @@ def test_components_star_stops_at_first_star_forest(spark, tmp_path):
     from lynxkite_spark.operators.components import _star_forest
     from lynxkite_spark.plans.checkpoint import CheckpointManager, step_key
 
-    def stops(pairs):
+    def check(pairs):
         e = spark.createDataFrame(pairs, "src long, dst long")
-        return _star_forest(e, e)[0]
+        stop, record = _star_forest(e, e)
+        return stop, record["not_star"]
 
-    assert stops([(1, 0), (2, 0), (4, 3), (5, 3)])  # two stars
-    assert not stops([(2, 0), (2, 1)])  # leaf 2 has two centres
-    assert not stops([(2, 1), (1, 0)])  # chain: leaf 2 -> centre 1 -> centre 0
+    assert check([(1, 0), (2, 0), (4, 3), (5, 3)]) == (True, 0)  # two stars
+    assert check([(2, 0), (2, 1)]) == (False, 1)  # leaf 2 has two centres
+    assert check([(2, 1), (1, 0)]) == (False, 1)  # chain: leaf 2 -> centre 1 -> centre 0
+    assert check([(2, 0), (2, 1), (5, 3), (5, 4)]) == (False, 2)  # leaves 2 and 5 have two centres each
 
     g = graph_from_adjacency(spark, {0: [1, 2, 3]})  # already a star
     cp = CheckpointManager(spark, str(tmp_path / "cc_star"))

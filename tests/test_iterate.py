@@ -93,13 +93,14 @@ def test_change_check_stops_and_drops_prev(spark):
     rounds = []
 
     def changed(new, old):
-        rounds.append(1)
-        return changed_rows("x")(new, old)
+        stop, record = changed_rows("x")(new, old)
+        rounds.append(record["changed"])
+        return stop, record
 
     out = run_supersteps(spark.range(4).select("id", F.lit(0).alias("x")), step, limit=10, changed=changed)
     assert out.columns == ["id", "x"]
     assert {r["x"] for r in out.collect()} == {3}
-    assert len(rounds) == 4  # three rounds that change, one that does not
+    assert rounds == [4, 4, 4, 0]  # three rounds change every vertex, one changes none
 
 
 def test_operator_with_failing_store_releases_its_caches(spark, tmp_path):
@@ -165,3 +166,33 @@ def test_operator_releases_every_cache_it_pins(spark, name):
     spark.catalog.clearCache()
     _CALLS[name](_ring(spark), spark).collect()
     assert _cache_empty(spark)
+
+
+def test_repeated_calls_reuse_their_generated_code(spark):
+    """A second call of an operator compiles no class: its plans hit
+    Spark's codegen cache, which the session sizes above the working
+    set, and its change checks carry no ``limit`` (whose generated code
+    names a fresh counter field on every call)."""
+    from lynxkite_spark.operators.components import connected_components
+    from lynxkite_spark.operators.kcore import core_decomposition
+    from lynxkite_spark.operators.labelprop import label_propagation
+    from lynxkite_spark.operators.triangles import triangle_count
+    from tests.test_hyperball import _er_graph
+
+    g = _er_graph(spark, n=200)
+    calls = {
+        "star": lambda: connected_components(g, algorithm="star"),
+        "minlabel": lambda: connected_components(g, algorithm="minlabel"),
+        "lpa": lambda: label_propagation(g, max_iterations=5),
+        "kcore": lambda: core_decomposition(g),
+        "triangles": lambda: triangle_count(g),
+    }
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    for call in calls.values():
+        call().collect()
+    added = {}
+    for name, call in calls.items():
+        before = compiles.getCount()
+        call().collect()
+        added[name] = compiles.getCount() - before
+    assert added == {name: 0 for name in calls}
