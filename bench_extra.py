@@ -119,9 +119,11 @@ def suite_queries(spark, sf_dir: str):
             max_iterations=100,
         ).count(),
     )
+    # the same derive again, on a warm session (the key is kept from
+    # when this timed a second extractor)
     yield (
         "q_corpus_derive_builtin",
-        lambda: derive_repo_edges(state["corpus"], extractor="builtin")[0].count(),
+        lambda: derive_repo_edges(state["corpus"])[0].count(),
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

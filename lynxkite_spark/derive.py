@@ -1,9 +1,9 @@
 """Corpus → dependency edge tables (the engine's ingestion path).
 
-Parses import statements out of ``content`` with an Arrow-vectorized
-pandas UDF (pandas ``str.findall`` — no per-row Python UDFs), resolves
-the imported module names against the repo dictionary, and aggregates to
-a weighted repo→repo edge table. Mirrors the reference's
+Parses import statements out of ``content`` with ``regexp_extract_all``
+inside whole-stage codegen (no Python worker, no Arrow boundary),
+resolves the imported module names against the repo dictionary, and
+aggregates to a weighted repo→repo edge table. Mirrors the reference's
 ImportEdgesForExistingVertices semantics
 (/root/reference/app/.../graph_operations/ImportGraphFromTable.scala:46-106):
 endpoints are resolved against a unique name attribute and unresolvable
@@ -17,49 +17,34 @@ relative to the corpus even at 10^12 files ~ 10^8 repos).
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-# one pattern per language; capture group = dotted module path
-IMPORT_PATTERNS = {
-    "python": re.compile(r"^import\s+([A-Za-z_][\w.]*)", re.M),
-    "java": re.compile(r"^import\s+([A-Za-z_][\w.]*)\s*;", re.M),
-    "go": re.compile(r'"([A-Za-z_][\w.]*)"'),
-}
-_MODULE_RE = re.compile(r"^org_repo_(\d{5})")
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def extract_imports(content: pd.Series, lang: pd.Series) -> pd.Series:
-    """Vectorized import extraction: per Arrow batch, one findall pass per
-    language group (pandas str engine, not row-at-a-time)."""
-    out = pd.Series([[]] * len(content), index=content.index, dtype=object)
-    for lg, pat in IMPORT_PATTERNS.items():
-        mask = lang == lg
-        if mask.any():
-            out[mask] = content[mask].str.findall(pat)
-    return out
+def extract_imports(content: Column, lang: Column) -> Column:
+    """Imported module names per file: ``array<string>``, one capture
+    per import statement of the file's language (python and java
+    ``import a.b`` lines, go ``"a.b"`` literals; other languages yield
+    an empty array).
 
-
-def extract_imports_builtin(content, lang):
-    """The same extraction as :func:`extract_imports` but entirely
-    JVM-side (``regexp_extract_all`` inside whole-stage codegen — no
-    Arrow boundary at all). The north rule's contract is the
-    pandas/Arrow form, which stays the default; this variant exists to
-    quantify the Python-boundary cost (bench: q_corpus_derive vs
-    q_corpus_derive_builtin) and as the faster choice when the
-    vectorized-UDF requirement doesn't apply."""
-    jvm_patterns = {
-        "python": r"(?m)^import\s+([A-Za-z_][\w.]*)",
-        "java": r"(?m)^import\s+([A-Za-z_][\w.]*)\s*;",
-        "go": r'"([A-Za-z_][\w.]*)"',
+    The grammar is Python ``re`` semantics (``^`` after ``\\n`` only,
+    Unicode ``\\w`` and ``\\s``), written for ``java.util.regex``:
+    ``(?d)`` keeps ``^`` off a lone ``\\r``, U+0085 and U+2028;
+    ``[\\s\\x1c-\\x1f]`` under ``(?U)`` is Python's ``\\s``;
+    ``[\\p{L}\\p{N}_]`` is Python's ``\\w`` (not ``(?U)\\w``, which
+    also takes marks and connector punctuation). The one gap is the
+    Unicode version: the JVM's character tables may predate Python's,
+    so a code point the JVM leaves undefined (Java 17: Unicode 13) but
+    Python assigns as a letter, digit or space can match in Python and
+    not here."""
+    name = r"([A-Za-z_][\p{L}\p{N}_.]*)"
+    patterns = {
+        "python": rf"(?mdU)^import[\s\x1c-\x1f]+{name}",
+        "java": rf"(?mdU)^import[\s\x1c-\x1f]+{name}[\s\x1c-\x1f]*;",
+        "go": rf'(?U)"{name}"',
     }
     expr = F.array().cast("array<string>")
-    for lg, pat in jvm_patterns.items():
+    for lg, pat in patterns.items():
         expr = F.when(
             lang == lg, F.regexp_extract_all(content, F.lit(pat), F.lit(1))
         ).otherwise(expr)
@@ -73,9 +58,7 @@ def module_to_repo(col):
     )
 
 
-def derive_repo_edges(
-    corpus: DataFrame, extractor: str = "pandas"
-) -> tuple[DataFrame, DataFrame]:
+def derive_repo_edges(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Corpus → (repo_edges[src,dst,weight], repo_ids[id,repo]).
 
     * IDs are value-derived ``xxhash64(repo)`` — identical across runs and
@@ -86,16 +69,15 @@ def derive_repo_edges(
     repos = corpus.select("repo").distinct()
     repo_ids = repos.select(F.xxhash64("repo").alias("id"), "repo")
 
-    imports = (
-        extract_imports_builtin(F.col("content"), F.col("lang"))
-        if extractor == "builtin"
-        else extract_imports("content", "lang")
-    )
     refs = (
-        corpus.select("repo", F.explode(imports).alias("module"))
-        .withColumn("dst_repo", module_to_repo(F.col("module")))
+        corpus.select(
+            "repo",
+            F.explode(extract_imports(F.col("content"), F.col("lang"))).alias("module"),
+        )
+        .select("repo", F.regexp_extract("module", r"^org_repo_(\d{5})", 1).alias("digits"))
+        .where(F.col("digits") != "")
+        .select("repo", F.concat(F.lit("org/repo-"), "digits").alias("dst_repo"))
         .where(F.col("dst_repo") != F.col("repo"))
-        .where(F.regexp_extract("module", r"^org_repo_(\d{5})", 1) != "")
     )
     # resolve dst against the dictionary (drop dangling refs); broadcast —
     # the dictionary is orders of magnitude smaller than the reference stream
@@ -127,7 +109,7 @@ def derive_file_edges(corpus: DataFrame) -> DataFrame:
         corpus.select(
             F.xxhash64("repo", "path").alias("src"),
             "repo",
-            F.explode(extract_imports("content", "lang")).alias("module"),
+            F.explode(extract_imports(F.col("content"), F.col("lang"))).alias("module"),
         )
         .select(
             "src",

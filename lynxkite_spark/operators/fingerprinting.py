@@ -185,16 +185,18 @@ def fingerprinting(
         multi_neighbors_preference,
         score_round,
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    if propose_side is None:
-        n_left = sims.select("left").distinct().count()
-        n_right = sims.select("right").distinct().count()
-        propose_side = "left" if n_right < n_left else "right"
-    if propose_side == "left":
-        match = stable_marriage(sims, "left", "right", max_iterations)
-        out = match.select(F.col("g").alias("left"), F.col("l").alias("right"))
-    else:
-        match = stable_marriage(sims, "right", "left", max_iterations)
-        out = match.select(F.col("l").alias("left"), F.col("g").alias("right"))
-    result = out.join(sims, ["left", "right"])
-    sims.unpersist()
+    try:
+        if propose_side is None:
+            n_left = sims.select("left").distinct().count()
+            n_right = sims.select("right").distinct().count()
+            propose_side = "left" if n_right < n_left else "right"
+        if propose_side == "left":
+            match = stable_marriage(sims, "left", "right", max_iterations)
+            out = match.select(F.col("g").alias("left"), F.col("l").alias("right"))
+        else:
+            match = stable_marriage(sims, "right", "left", max_iterations)
+            out = match.select(F.col("l").alias("left"), F.col("g").alias("right"))
+        result = out.join(sims, ["left", "right"])
+    finally:
+        sims.unpersist()
     return result

@@ -164,19 +164,7 @@ def hyperball(
     the sketches are a fixed point — the sketch union is monotone, so
     an unchanged signature means convergence (use for effective
     diameter, where max_distance is a generous cap, not a target)."""
-    # NOT pre-partitioned by src (unlike kcore/betweenness): the gather
-    # join's output feeds a partial aggregation whose compression ratio
-    # falls with map-partition count — pinning the edge table to the
-    # static session partitioning disabled AQE's coalescing of the join
-    # stage and measurably grew the merge shuffle (627 MB → 886 MB at
-    # sf0.1). Letting AQE size the join stage wins here.
-    e = (
-        graph.edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    vertices = graph.vertices.select("id").persist(StorageLevel.MEMORY_AND_DISK)
+    vertices = graph.vertices.select("id")
     spark = graph.vertices.sparkSession
     m = 1 << log2m
     # WIDE state for small m (the common centrality setting): one row
@@ -239,6 +227,18 @@ def hyperball(
         return (r[0], r[1])
 
     sig = signature() if early_stop else None
+    # NOT pre-partitioned by src (unlike kcore/betweenness): the gather
+    # join's output feeds a partial aggregation whose compression ratio
+    # falls with map-partition count — pinning the edge table to the
+    # static session partitioning disabled AQE's coalescing of the join
+    # stage and measurably grew the merge shuffle (627 MB → 886 MB at
+    # sf0.1). Letting AQE size the join stage wins here.
+    e = (
+        graph.edges.select("src", "dst")
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     # Whole-stage codegen is a net loss for the wide merge stages: the
     # generated classes for a 64-column join+union+max-aggregate are so
     # large that Janino compilation costs ~5 s of serial driver wall

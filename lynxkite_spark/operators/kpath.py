@@ -43,42 +43,44 @@ def kpath_centrality(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     vertices = graph.vertices.select("id")
-    walkers = vertices.select(
-        F.explode(
-            F.array(*[F.lit(w) for w in range(walks_per_vertex)])
-        ).alias("w"),
-        "id",
-    ).select(
-        (F.col("id") * walks_per_vertex + F.col("w")).alias("wid"),
-        F.col("id").alias("pos"),
-        F.array("id").alias("visited"),
-    ).localCheckpoint(eager=True)
-
-    visits = []
-    for s in range(1, k + 1):
-        cand = walkers.join(e, walkers.pos == e.src).where(
-            ~F.array_contains(F.col("visited"), F.col("dst"))
-        )
-        if hash_fn == "portable":
-            h = portable_hash64(
-                F.concat_ws("_", F.col("wid"), F.col("dst")), s
-            )
-        else:
-            h = F.xxhash64("wid", F.lit(s), "dst")
-        step = cand.groupBy("wid").agg(
-            F.max_by(F.struct(F.col("dst"), F.col("visited")), F.struct(h, F.col("dst"))).alias(
-                "c"
-            )
-        )
-        walkers = step.select(
-            "wid",
-            F.col("c.dst").alias("pos"),
-            F.concat(F.col("c.visited"), F.array(F.col("c.dst"))).alias("visited"),
+    try:
+        walkers = vertices.select(
+            F.explode(
+                F.array(*[F.lit(w) for w in range(walks_per_vertex)])
+            ).alias("w"),
+            "id",
+        ).select(
+            (F.col("id") * walks_per_vertex + F.col("w")).alias("wid"),
+            F.col("id").alias("pos"),
+            F.array("id").alias("visited"),
         ).localCheckpoint(eager=True)
-        visits.append(walkers.select(F.col("pos").alias("id")))
-        if walkers.limit(1).count() == 0:
-            break
-    e.unpersist()
+
+        visits = []
+        for s in range(1, k + 1):
+            cand = walkers.join(e, walkers.pos == e.src).where(
+                ~F.array_contains(F.col("visited"), F.col("dst"))
+            )
+            if hash_fn == "portable":
+                h = portable_hash64(
+                    F.concat_ws("_", F.col("wid"), F.col("dst")), s
+                )
+            else:
+                h = F.xxhash64("wid", F.lit(s), "dst")
+            step = cand.groupBy("wid").agg(
+                F.max_by(F.struct(F.col("dst"), F.col("visited")), F.struct(h, F.col("dst"))).alias(
+                    "c"
+                )
+            )
+            walkers = step.select(
+                "wid",
+                F.col("c.dst").alias("pos"),
+                F.concat(F.col("c.visited"), F.array(F.col("c.dst"))).alias("visited"),
+            ).localCheckpoint(eager=True)
+            visits.append(walkers.select(F.col("pos").alias("id")))
+            if walkers.limit(1).count() == 0:
+                break
+    finally:
+        e.unpersist()
     if not visits:
         return vertices.select("id", F.lit(0).cast("long").alias("kpath"))
     all_visits = visits[0]

@@ -64,99 +64,101 @@ def _one_level(
         .select("id", F.coalesce("k", F.lit(0.0)).alias("k"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    labels = k_tab.select("id", F.col("id").alias("label"), "k").localCheckpoint(
-        eager=True
-    )
-    # Self-loop rows appear after contraction (a community's internal
-    # weight, both orientations). They belong in k and Σtot — loop mass
-    # moves with the vertex — but NOT in k_{v,c}: the loop's dst label is
-    # the vertex's own community, so counting it would inflate the stay
-    # side only and freeze contracted vertices at levels >= 2.
-    sym_noloop = sym.where(F.col("src") != F.col("dst"))
-    for rnd in range(max_rounds):
-        # community totals Σtot_c
-        tot = labels.groupBy("label").agg(F.sum("k").alias("tot"))
-        # k_{v,c}: weight from v to each neighboring community (loop-free)
-        nbr_lab = labels.select(F.col("id").alias("dst"), F.col("label").alias("c"))
-        kvc = (
-            sym_noloop.join(nbr_lab.hint("shuffle_hash"), "dst")
-            .groupBy(F.col("src").alias("id"), "c")
-            .agg(F.sum("weight").alias("kvc"))
+    try:
+        labels = k_tab.select("id", F.col("id").alias("label"), "k").localCheckpoint(
+            eager=True
         )
-        cur = labels.select("id", F.col("label").alias("cur"), "k")
-        # gain(v→c) for c != cur: k_{v,c} − k_v·Σtot_c/(2m); the stay side
-        # is computed explicitly below (Σtot_cur already contains k_v, so
-        # it is subtracted there) — never coalesced to 0, which would
-        # overstate staying whenever v has no neighbor in its own
-        # community (true stay gain is then −k·(Σtot_cur−k)/2m < 0).
-        cand = (
-            kvc.join(cur.hint("shuffle_hash"), "id")
-            .join(tot.select(F.col("label").alias("c"), "tot"), "c")
-            .select(
-                "id",
-                "c",
-                "cur",
-                "k",
-                "kvc",
-                (F.col("kvc") - F.col("k") * F.col("tot") / F.lit(two_m)).alias(
-                    "gain"
-                ),
+        # Self-loop rows appear after contraction (a community's internal
+        # weight, both orientations). They belong in k and Σtot — loop mass
+        # moves with the vertex — but NOT in k_{v,c}: the loop's dst label is
+        # the vertex's own community, so counting it would inflate the stay
+        # side only and freeze contracted vertices at levels >= 2.
+        sym_noloop = sym.where(F.col("src") != F.col("dst"))
+        for rnd in range(max_rounds):
+            # community totals Σtot_c
+            tot = labels.groupBy("label").agg(F.sum("k").alias("tot"))
+            # k_{v,c}: weight from v to each neighboring community (loop-free)
+            nbr_lab = labels.select(F.col("id").alias("dst"), F.col("label").alias("c"))
+            kvc = (
+                sym_noloop.join(nbr_lab.hint("shuffle_hash"), "dst")
+                .groupBy(F.col("src").alias("id"), "c")
+                .agg(F.sum("weight").alias("kvc"))
             )
-        )
-        best = (
-            cand.where(F.col("c") != F.col("cur"))
-            .groupBy("id")
-            .agg(
-                F.max_by("c", F.struct(F.col("gain"), -F.col("c"))).alias("best_c"),
-                F.max("gain").alias("best_gain"),
-                F.first("cur").alias("cur"),
-                F.first("k").alias("k"),
+            cur = labels.select("id", F.col("label").alias("cur"), "k")
+            # gain(v→c) for c != cur: k_{v,c} − k_v·Σtot_c/(2m); the stay side
+            # is computed explicitly below (Σtot_cur already contains k_v, so
+            # it is subtracted there) — never coalesced to 0, which would
+            # overstate staying whenever v has no neighbor in its own
+            # community (true stay gain is then −k·(Σtot_cur−k)/2m < 0).
+            cand = (
+                kvc.join(cur.hint("shuffle_hash"), "id")
+                .join(tot.select(F.col("label").alias("c"), "tot"), "c")
+                .select(
+                    "id",
+                    "c",
+                    "cur",
+                    "k",
+                    "kvc",
+                    (F.col("kvc") - F.col("k") * F.col("tot") / F.lit(two_m)).alias(
+                        "gain"
+                    ),
+                )
             )
-        )
-        kvc_cur = cand.where(F.col("c") == F.col("cur")).select(
-            "id", F.col("kvc").alias("kvc_cur")
-        )
-        tot_cur = tot.select(F.col("label").alias("cur"), F.col("tot").alias("tot_cur"))
-        scored = (
-            best.join(kvc_cur.hint("shuffle_hash"), "id", "left")
-            .join(tot_cur, "cur")
-            .select(
-                "id",
-                "best_c",
-                "best_gain",
-                "cur",
-                (
-                    F.coalesce(F.col("kvc_cur"), F.lit(0.0))
-                    - F.col("k") * (F.col("tot_cur") - F.col("k")) / F.lit(two_m)
-                ).alias("stay_gain"),
+            best = (
+                cand.where(F.col("c") != F.col("cur"))
+                .groupBy("id")
+                .agg(
+                    F.max_by("c", F.struct(F.col("gain"), -F.col("c"))).alias("best_c"),
+                    F.max("gain").alias("best_gain"),
+                    F.first("cur").alias("cur"),
+                    F.first("k").alias("k"),
+                )
             )
-        )
-        # move only on strict improvement, half-synchronously (hash parity);
-        # convergence is judged on the PRE-parity wanted set — a round
-        # where every beneficial move happens to be parity-blocked is not
-        # converged (the parity flips next round)
-        wanted = scored.where(
-            F.col("best_gain") > F.col("stay_gain") + 1e-12
-        ).select("id", F.col("best_c").alias("new_label"))
-        wanted = wanted.localCheckpoint(eager=True)
-        n_wanted = wanted.limit(1).count()
-        if n_wanted == 0:
-            break
-        # half-synchronous move parity; hash_fn="portable" makes the
-        # DuckDB oracle able to replay the parity decision exactly
-        if hash_fn == "portable":
-            movable = F.pmod(portable_hash64(F.col("id"), rnd), F.lit(2)) == 0
-        else:
-            movable = F.pmod(F.xxhash64("id", F.lit(rnd)), F.lit(2)) == 0
-        moves = wanted.where(movable)
-        labels = (
-            labels.join(moves, "id", "left")
-            .select(
-                "id", F.coalesce("new_label", "label").alias("label"), "k"
+            kvc_cur = cand.where(F.col("c") == F.col("cur")).select(
+                "id", F.col("kvc").alias("kvc_cur")
             )
-            .localCheckpoint(eager=True)
-        )
-    k_tab.unpersist()
+            tot_cur = tot.select(F.col("label").alias("cur"), F.col("tot").alias("tot_cur"))
+            scored = (
+                best.join(kvc_cur.hint("shuffle_hash"), "id", "left")
+                .join(tot_cur, "cur")
+                .select(
+                    "id",
+                    "best_c",
+                    "best_gain",
+                    "cur",
+                    (
+                        F.coalesce(F.col("kvc_cur"), F.lit(0.0))
+                        - F.col("k") * (F.col("tot_cur") - F.col("k")) / F.lit(two_m)
+                    ).alias("stay_gain"),
+                )
+            )
+            # move only on strict improvement, half-synchronously (hash parity);
+            # convergence is judged on the PRE-parity wanted set — a round
+            # where every beneficial move happens to be parity-blocked is not
+            # converged (the parity flips next round)
+            wanted = scored.where(
+                F.col("best_gain") > F.col("stay_gain") + 1e-12
+            ).select("id", F.col("best_c").alias("new_label"))
+            wanted = wanted.localCheckpoint(eager=True)
+            n_wanted = wanted.limit(1).count()
+            if n_wanted == 0:
+                break
+            # half-synchronous move parity; hash_fn="portable" makes the
+            # DuckDB oracle able to replay the parity decision exactly
+            if hash_fn == "portable":
+                movable = F.pmod(portable_hash64(F.col("id"), rnd), F.lit(2)) == 0
+            else:
+                movable = F.pmod(F.xxhash64("id", F.lit(rnd)), F.lit(2)) == 0
+            moves = wanted.where(movable)
+            labels = (
+                labels.join(moves, "id", "left")
+                .select(
+                    "id", F.coalesce("new_label", "label").alias("label"), "k"
+                )
+                .localCheckpoint(eager=True)
+            )
+    finally:
+        k_tab.unpersist()
     return labels.select("id", "label")
 
 
@@ -171,46 +173,48 @@ def modular_clustering(
     one of its members — deterministic, value-derived)."""
     g = graph.with_weight()
     sym = _sym_weighted(g.edges).persist(StorageLevel.MEMORY_AND_DISK)
-    two_m = sym.agg(F.sum("weight")).first()[0] or 0.0
-    vertices = g.vertices.select("id")
-    if two_m == 0.0:
-        return vertices.select("id", F.col("id").alias("label"))
+    try:
+        two_m = sym.agg(F.sum("weight")).first()[0] or 0.0
+        vertices = g.vertices.select("id")
+        if two_m == 0.0:
+            return vertices.select("id", F.col("id").alias("label"))
 
-    # vertex → community at the ORIGINAL level
-    assignment = vertices.select("id", F.col("id").alias("label")).localCheckpoint(
-        eager=True
-    )
-    cur_vertices = vertices
-    cur_sym = sym
-    for level in range(levels):
-        labels = _one_level(cur_sym, cur_vertices, two_m, max_rounds, hash_fn)
-        # compose: original id → this level's community
-        assignment = (
-            assignment.join(
-                labels.select(F.col("id").alias("label"), F.col("label").alias("nl")),
-                "label",
+        # vertex → community at the ORIGINAL level
+        assignment = vertices.select("id", F.col("id").alias("label")).localCheckpoint(
+            eager=True
+        )
+        cur_vertices = vertices
+        cur_sym = sym
+        for level in range(levels):
+            labels = _one_level(cur_sym, cur_vertices, two_m, max_rounds, hash_fn)
+            # compose: original id → this level's community
+            assignment = (
+                assignment.join(
+                    labels.select(F.col("id").alias("label"), F.col("label").alias("nl")),
+                    "label",
+                )
+                .select("id", F.col("nl").alias("label"))
+                .localCheckpoint(eager=True)
             )
-            .select("id", F.col("nl").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        # contract communities to vertices; stop when nothing merged
-        n_before = cur_vertices.count()
-        cur_vertices = labels.select(F.col("label").alias("id")).distinct()
-        n_after = cur_vertices.count()
-        if n_after == n_before or level == levels - 1:
-            break
-        # contraction KEEPS self-loops: sym holds both orientations of
-        # every internal edge, so the (c, c) row carries 2x the internal
-        # weight — exactly what the next level's k_v and Σtot need (and
-        # the reason two_m stays invariant across levels)
-        lab_src = labels.select(F.col("id").alias("src"), F.col("label").alias("ls"))
-        lab_dst = labels.select(F.col("id").alias("dst"), F.col("label").alias("ld"))
-        cur_sym = (
-            cur_sym.join(lab_src, "src")
-            .join(lab_dst, "dst")
-            .groupBy(F.col("ls").alias("src"), F.col("ld").alias("dst"))
-            .agg(F.sum("weight").alias("weight"))
-            .localCheckpoint(eager=True)
-        )
-    sym.unpersist()
+            # contract communities to vertices; stop when nothing merged
+            n_before = cur_vertices.count()
+            cur_vertices = labels.select(F.col("label").alias("id")).distinct()
+            n_after = cur_vertices.count()
+            if n_after == n_before or level == levels - 1:
+                break
+            # contraction KEEPS self-loops: sym holds both orientations of
+            # every internal edge, so the (c, c) row carries 2x the internal
+            # weight — exactly what the next level's k_v and Σtot need (and
+            # the reason two_m stays invariant across levels)
+            lab_src = labels.select(F.col("id").alias("src"), F.col("label").alias("ls"))
+            lab_dst = labels.select(F.col("id").alias("dst"), F.col("label").alias("ld"))
+            cur_sym = (
+                cur_sym.join(lab_src, "src")
+                .join(lab_dst, "dst")
+                .groupBy(F.col("ls").alias("src"), F.col("ld").alias("dst"))
+                .agg(F.sum("weight").alias("weight"))
+                .localCheckpoint(eager=True)
+            )
+    finally:
+        sym.unpersist()
     return assignment

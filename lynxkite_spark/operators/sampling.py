@@ -45,50 +45,52 @@ def random_walk_sample(
     """
     assert 0.0 <= restart_probability < 1.0
     e = graph.edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
-    starts = (
-        graph.vertices.select("id")
-        .orderBy(F.xxhash64(F.lit(seed), "id"))
-        .limit(num_walkers)
-        .select(
-            F.row_number().over(Window.orderBy("id")).alias("walker"),
-            F.col("id").alias("start"),
-        )
-    )
-    # walkers[walker, start, pos]
-    walkers = starts.select("walker", "start", F.col("start").alias("pos"))
-    walkers = walkers.localCheckpoint(eager=True)
-    visited = walkers.select(F.col("pos").alias("id"), F.lit(0).alias("first_visited"))
-    visited = visited.localCheckpoint(eager=True)
-    for step in range(1, max_steps + 1):
-        moved = (
-            walkers.join(e, walkers.pos == e.src, "left")
-            .groupBy("walker", "start", "pos")
-            .agg(
-                F.max_by(
-                    "dst", F.xxhash64(F.lit(seed), F.lit(step), F.col("walker"), F.col("dst"))
-                ).alias("nxt")
+    try:
+        starts = (
+            graph.vertices.select("id")
+            .orderBy(F.xxhash64(F.lit(seed), "id"))
+            .limit(num_walkers)
+            .select(
+                F.row_number().over(Window.orderBy("id")).alias("walker"),
+                F.col("id").alias("start"),
             )
         )
-        restart = (
-            F.pmod(F.xxhash64(F.lit(seed), F.lit(step), F.col("walker")), F.lit(10_000))
-            < F.lit(int(restart_probability * 10_000))
-        )
-        walkers = moved.select(
-            "walker",
-            "start",
-            F.when(restart | F.col("nxt").isNull(), F.col("start"))
-            .otherwise(F.col("nxt"))
-            .alias("pos"),
-        ).localCheckpoint(eager=True)
-        visited = (
-            visited.unionByName(
-                walkers.select(F.col("pos").alias("id"), F.lit(step).alias("first_visited"))
+        # walkers[walker, start, pos]
+        walkers = starts.select("walker", "start", F.col("start").alias("pos"))
+        walkers = walkers.localCheckpoint(eager=True)
+        visited = walkers.select(F.col("pos").alias("id"), F.lit(0).alias("first_visited"))
+        visited = visited.localCheckpoint(eager=True)
+        for step in range(1, max_steps + 1):
+            moved = (
+                walkers.join(e, walkers.pos == e.src, "left")
+                .groupBy("walker", "start", "pos")
+                .agg(
+                    F.max_by(
+                        "dst", F.xxhash64(F.lit(seed), F.lit(step), F.col("walker"), F.col("dst"))
+                    ).alias("nxt")
+                )
             )
-            .groupBy("id")
-            .agg(F.min("first_visited").alias("first_visited"))
-            .localCheckpoint(eager=True)
-        )
-    e.unpersist()
+            restart = (
+                F.pmod(F.xxhash64(F.lit(seed), F.lit(step), F.col("walker")), F.lit(10_000))
+                < F.lit(int(restart_probability * 10_000))
+            )
+            walkers = moved.select(
+                "walker",
+                "start",
+                F.when(restart | F.col("nxt").isNull(), F.col("start"))
+                .otherwise(F.col("nxt"))
+                .alias("pos"),
+            ).localCheckpoint(eager=True)
+            visited = (
+                visited.unionByName(
+                    walkers.select(F.col("pos").alias("id"), F.lit(step).alias("first_visited"))
+                )
+                .groupBy("id")
+                .agg(F.min("first_visited").alias("first_visited"))
+                .localCheckpoint(eager=True)
+            )
+    finally:
+        e.unpersist()
     return visited
 
 

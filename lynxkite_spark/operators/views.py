@@ -118,29 +118,25 @@ def edges_for_vertices(
     spark = graph.edges.sparkSession
     idf = F.broadcast(spark.createDataFrame([(int(i),) for i in ids], "id long"))
     e = _edges_with_ids(graph.edges)
-    # persisted: the budget probe below executes the semi-join union,
-    # and without the cache the caller's action re-executed the
-    # identical plan a second time (r5 verdict "what's wrong" #3).
-    # persist (not an eager checkpoint) keeps the limit probe's
-    # property that an over-budget result is never fully materialized.
     incident = (
         e.join(idf.withColumnRenamed("id", "src"), "src", "left_semi")
         .unionByName(
             e.join(idf.withColumnRenamed("id", "dst"), "dst", "left_semi")
         )
         .dropDuplicates(["edge_id"])
-        .persist()
     )
-    probe = incident.limit(max_edges + 1)
+    # the capped probe is materialized once and, within budget, is the
+    # result: the semi-join union runs one time and never yields more
+    # than max_edges + 1 rows, and no cache outlives the call
+    probe = incident.limit(max_edges + 1).localCheckpoint(eager=True)
     if probe.count() > max_edges:
-        incident.unpersist()
         raise ValueError(
             f"edges_for_vertices: id set touches more than max_edges="
             f"{max_edges} edges (the reference's maxNumEdges abort, "
             f"TripletAttributes.scala:140-152); sample fewer centers or "
             f"raise the budget."
         )
-    return incident.select("edge_id", "src", "dst")
+    return probe.select("edge_id", "src", "dst")
 
 
 def sampled_view(

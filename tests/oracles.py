@@ -4,7 +4,22 @@ reference's documented semantics directly — no Spark, no numpy."""
 
 from __future__ import annotations
 
+import re
 from collections import Counter, defaultdict
+
+# The corpus import grammar, one pattern per language (capture = dotted
+# module path): the reference for lynxkite_spark/derive.py's JVM patterns.
+IMPORT_PATTERNS = {
+    "python": re.compile(r"^import\s+([A-Za-z_][\w.]*)", re.M),
+    "java": re.compile(r"^import\s+([A-Za-z_][\w.]*)\s*;", re.M),
+    "go": re.compile(r'"([A-Za-z_][\w.]*)"'),
+}
+
+
+def imports_oracle(content: str, lang: str) -> list[str]:
+    """Module names ``content`` imports; [] for a language without a pattern."""
+    pattern = IMPORT_PATTERNS.get(lang)
+    return pattern.findall(content) if pattern is not None else []
 
 
 def pagerank_oracle(

@@ -184,21 +184,73 @@ def test_checkpoint_resume(spark, corpus, tmp_path):
     assert {r["id"]: r["pagerank"] for r in again.collect()} == ranks_resumed
 
 
-def test_builtin_extractor_matches_pandas_udf(spark):
-    """derive.py offers a JVM-side regexp_extract_all variant; it must
-    produce exactly the pandas-UDF edge table."""
-    from lynxkite_spark.corpus import synth_corpus
-    from lynxkite_spark.derive import derive_repo_edges
+def _extraction_mismatches(spark, rows):
+    """rows: (key, lang, content). The keys whose ``extract_imports``
+    result differs from the Python ``re`` oracle's."""
+    from lynxkite_spark.derive import extract_imports
+    from tests.oracles import imports_oracle
 
+    df = spark.createDataFrame(
+        [(k, lg, c, imports_oracle(c, lg)) for k, lg, c in rows],
+        "key string, lang string, content string, want array<string>",
+    )
+    got = extract_imports(F.col("content"), F.col("lang"))
+    return sorted(r["key"] for r in df.where(got != F.col("want")).select("key").collect())
+
+
+# line breaks Python's ``^`` does not follow (lone CR, U+0085, U+2028),
+# Unicode separators its ``\s`` takes (NBSP, em space, U+001C), Unicode
+# letters and digits its ``\w`` takes, and two it does not (a combining
+# accent, the connector punctuation U+203F)
+_CRAFTED = {
+    "crlf": ("python", "import org_repo_00001.a\r\nimport org_repo_00002.b\r\n"),
+    "lone_cr": ("python", "x\rimport org_repo_00001.a"),
+    "nel": ("java", "x\x85import org_repo_00001.a;"),
+    "line_sep": ("python", "x\u2028import org_repo_00001.a"),
+    "nbsp": ("python", "import\xa0org_repo_00001.a"),
+    "em_space": ("java", "import\u2003org_repo_00001.a\u2003;"),
+    "file_sep": ("python", "import\x1corg_repo_00001.a"),
+    "e_acute": ("java", "import org_repo_00001.mod\u00e9_3;"),
+    "arabic_digit": ("python", "import org_repo_00001.mod\u0663"),
+    "superscript": ("go", '"org_repo_00001.mod\u00b2"'),
+    "cjk": ("go", 'import "org_repo_00001.\u65e5\u672c"'),
+    "decomposed": ("python", "import org_repo_00001.moda\u0301x"),
+    "undertie": ("python", "import org_repo_00001.a\u203fb"),
+}
+
+# every code point c as a separator, a name character and a line break
+_SWEEP = {
+    "python": "import{c}a\nimport b{c}c\nx{c}import d\n",
+    "java": "import{c}a;\nimport b{c}c;\nimport e{c};\nx{c}import f;",
+    "go": '"a{c}b" "{c}c"',
+}
+
+
+def test_extract_imports_matches_python_re(spark):
+    """derive.py's one import extractor runs in the JVM; it must capture
+    what Python ``re`` captures (tests/oracles.py) on the synth corpus,
+    on crafted content and on every BMP code point, except code points
+    the JVM's Unicode tables leave undefined."""
     corpus = synth_corpus(spark, n_repos=40, n_files=800, seed=9)
-    a, _ = derive_repo_edges(corpus, extractor="pandas")
-    b, _ = derive_repo_edges(corpus, extractor="builtin")
-    ra = sorted(tuple(r) for r in a.collect())
-    rb = sorted(tuple(r) for r in b.collect())
-    assert ra == rb
-    # and the builtin path really has no Python in the plan
-    plan = b._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    files = [(str(i), r["lang"], r["content"]) for i, r in enumerate(corpus.select("lang", "content").collect())]
+    assert _extraction_mismatches(spark, files) == []
+
+    assert _extraction_mismatches(spark, [(k, lg, c) for k, (lg, c) in _CRAFTED.items()]) == []
+
+    sweep = [
+        (f"{lg}:{cp}", lg, t.format(c=chr(cp)))
+        for cp in range(0x10000)
+        if not 0xD800 <= cp <= 0xDFFF
+        for lg, t in _SWEEP.items()
+    ]
+    defined = spark._jvm.java.lang.Character.isDefined
+    bad = {int(k.split(":")[1]) for k in _extraction_mismatches(spark, sweep)}
+    assert [f"U+{cp:04X}" for cp in sorted(bad) if defined(cp)] == []
+
+    # no Python worker anywhere in the derive plans
+    for df in (derive_repo_edges(corpus)[0], derive_file_edges(corpus)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_lpa_and_cc_checkpoint_resume(spark, corpus, tmp_path):

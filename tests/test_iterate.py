@@ -9,6 +9,12 @@ from pyspark.sql import functions as F
 from lynxkite_spark.graph import Graph
 from lynxkite_spark.operators.betweenness import betweenness_centrality, closeness_centrality
 from lynxkite_spark.operators.centrality import eigenvector_centrality, harmonic_centrality, katz_centrality
+from lynxkite_spark.operators.coloring import greedy_coloring
+from lynxkite_spark.operators.fingerprinting import fingerprinting
+from lynxkite_spark.operators.hyperball import hyperball
+from lynxkite_spark.operators.kpath import kpath_centrality
+from lynxkite_spark.operators.modular import modular_clustering
+from lynxkite_spark.operators.sampling import random_walk_sample
 from lynxkite_spark.operators.shortest_path import shortest_path
 from lynxkite_spark.plans.checkpoint import CheckpointManager
 from lynxkite_spark.plans.iterate import run_supersteps
@@ -147,6 +153,12 @@ def test_edges_for_vertices_over_budget_leaves_no_cache(spark):
     with pytest.raises(ValueError, match="max_edges"):
         edges_for_vertices(_ring(spark), [0, 1, 2, 3], max_edges=2)
     assert _cache_empty(spark)
+    # within budget: the result, and still no cache
+    assert sorted((r["src"], r["dst"]) for r in edges_for_vertices(_ring(spark), [0], max_edges=2).collect()) == [
+        (0, 1),
+        (9, 0),
+    ]
+    assert _cache_empty(spark)
 
 
 _CALLS = {
@@ -158,6 +170,8 @@ _CALLS = {
     "harmonic": lambda g, s: harmonic_centrality(g, max_distance=3),
     "betweenness": lambda g, s: betweenness_centrality(g, k=4, max_depth=4),
     "closeness": lambda g, s: closeness_centrality(g, k=4, max_depth=4),
+    "hyperball": lambda g, s: hyperball(g, max_distance=3, log2m=4),
+    "modular_edgeless": lambda g, s: modular_clustering(Graph(vertices=g.vertices, edges=g.edges.limit(0))),
 }
 
 
@@ -165,6 +179,44 @@ _CALLS = {
 def test_operator_releases_every_cache_it_pins(spark, name):
     spark.catalog.clearCache()
     _CALLS[name](_ring(spark), spark).collect()
+    assert _cache_empty(spark)
+
+
+def _fingerprinting(g, s):
+    from tests.test_fingerprinting import _instance
+
+    cand, left, right = _instance(s)[:3]
+    return fingerprinting(cand, left, right, max_iterations=3)
+
+
+_RAISING = {
+    "coloring": lambda g, s: greedy_coloring(g),
+    "kpath": lambda g, s: kpath_centrality(g, k=3),
+    "random_walk": lambda g, s: random_walk_sample(g, max_steps=3),
+    "fingerprinting": _fingerprinting,
+    "modular": lambda g, s: modular_clustering(g),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_RAISING))
+def test_operator_releases_its_caches_when_a_round_raises(spark, monkeypatch, name):
+    """The second local checkpoint of each of these operators is taken
+    after it pins its caches (modular: its edges and, in a level, the
+    degree table); a failure there releases them all."""
+    g = _ring(spark)
+    cls = type(g.vertices)
+    real, calls = cls.localCheckpoint, []
+
+    def fail_second(df, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("round failed")
+        return real(df, *args, **kwargs)
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(cls, "localCheckpoint", fail_second)
+    with pytest.raises(RuntimeError, match="round failed"):
+        _RAISING[name](g, spark)
     assert _cache_empty(spark)
 
 

@@ -165,7 +165,7 @@ def test_encode_features_bounded_collect(spark):
     assert maps["f"] == {"a": 0.0, "b": 1.0}
 
 
-def test_edges_for_vertices_persists_incident(spark):
+def test_edges_for_vertices_materializes_incident_once(spark):
     from lynxkite_spark.graph import Graph
     from lynxkite_spark.operators.views import edges_for_vertices
 
@@ -176,9 +176,7 @@ def test_edges_for_vertices_persists_incident(spark):
     out = edges_for_vertices(g, [1])
     rows = {(r["src"], r["dst"]) for r in out.collect()}
     assert rows == {(0, 1), (1, 2)}
-    # the incident table is cached so the budget probe and the caller's
-    # action share one execution of the semi-join union
-    assert any(
-        "InMemoryRelation" in line or "InMemoryTableScan" in line
-        for line in out._jdf.queryExecution().executedPlan().toString().splitlines()
-    )
+    # the budget probe is materialized and returned, so the caller's
+    # action scans it and never runs the semi-join union a second time
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in plan and "Join" not in plan
