@@ -120,8 +120,9 @@ def connected_components(
     total function (every vertex labeled), component = min vertex id.
 
     With a ``CheckpointManager``, the min-label variant writes its label
-    table every ``checkpoint_every`` rounds and at the cap, and a rerun
-    resumes from the newest stored round (labels are exact longs —
+    table every ``checkpoint_every`` rounds, at the cap and at the round
+    no label changes; a rerun returns the stored final round as it is,
+    or resumes from the newest stored round (labels are exact longs —
     bit-identical resume).
     The star variant's state is the contracted edge set itself and is
     checkpointed the same way."""
@@ -137,16 +138,22 @@ def connected_components(
     }
 
     if algorithm == "star":
-        # per-round min tables are bounded by the (shrinking) vertex
-        # count: broadcast them below the same switch pagerank uses for
-        # its rank table — the contracted edge stream then never
-        # shuffles for the relink joins, only for groupBy/distinct
-        broadcast_m = broadcasts(graph.vertices.count())
+        broadcast_m = False
+
+        def setup() -> DataFrame:
+            # per-round min tables are bounded by the (shrinking) vertex
+            # count: broadcast them below the same switch pagerank uses
+            # for its rank table — the contracted edge stream then never
+            # shuffles for the relink joins, only for groupBy/distinct
+            nonlocal broadcast_m
+            broadcast_m = broadcasts(graph.vertices.count())
+            return edges
+
         # the state is the contracted edge set itself; star contraction
         # references it several times per round (plan growth, see
         # materialize), so the driver's per-round lineage cut matters
         e = run_supersteps(
-            edges,
+            setup,
             lambda e, k: _small_star(_large_star(e, broadcast_m), broadcast_m),
             changed=_star_forest,
             **harness,
@@ -158,7 +165,13 @@ def connected_components(
             .select(F.col("src").alias("id"), "component")
         )
     else:  # minlabel
-        edges = edges.repartition(n_part, "src").persist(StorageLevel.MEMORY_AND_DISK)
+        pinned: list[DataFrame] = []
+
+        def setup() -> DataFrame:
+            nonlocal edges
+            edges = edges.repartition(n_part, "src").persist(StorageLevel.MEMORY_AND_DISK)
+            pinned.append(edges)
+            return vertices.select("id", F.col("id").alias("component"))
 
         def step(labels: DataFrame, k: int) -> DataFrame:
             nbr_min = (
@@ -179,11 +192,11 @@ def connected_components(
             )
 
         labels = run_supersteps(
-            vertices.select("id", F.col("id").alias("component")),
+            setup,
             step,
             changed=changed_rows("component"),
             partition_by="id",
-            pinned=[edges],
+            pinned=pinned,
             **harness,
         )
 

@@ -187,8 +187,7 @@ def fingerprinting(
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         if propose_side is None:
-            n_left = sims.select("left").distinct().count()
-            n_right = sims.select("right").distinct().count()
+            n_left, n_right = sims.agg(F.countDistinct("left"), F.countDistinct("right")).first()
             propose_side = "left" if n_right < n_left else "right"
         if propose_side == "left":
             match = stable_marriage(sims, "left", "right", max_iterations)
@@ -196,7 +195,10 @@ def fingerprinting(
         else:
             match = stable_marriage(sims, "right", "left", max_iterations)
             out = match.select(F.col("l").alias("left"), F.col("g").alias("right"))
-        result = out.join(sims, ["left", "right"])
+        # materialized before ``sims`` is released, or the caller's
+        # action would score every candidate again; the matching is
+        # 1:1, so this copy is no larger than the smaller side
+        result = out.join(sims, ["left", "right"]).localCheckpoint(eager=True)
     finally:
         sims.unpersist()
     return result

@@ -39,30 +39,39 @@ def label_propagation(
     """Returns belongs_to: DataFrame[id: long, label: long].
 
     With a ``CheckpointManager`` the label table is written every
-    ``checkpoint_every`` rounds and at the cap (per-partition lineage
-    sidecar like PageRank's), and a rerun resumes from the newest
+    ``checkpoint_every`` rounds, at the cap and at the round no label
+    changes (per-partition lineage sidecar like PageRank's). A rerun
+    returns the stored final round as it is, or resumes from the newest
     stored round — labels are exact longs, so a resumed run is
     bit-identical."""
     spark = graph.vertices.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    g = graph.with_weight()
-    e = g.edges.select("src", "dst", "weight").where(F.col("src") != F.col("dst"))
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-    )
-    if not weighted:
-        sym = sym.withColumn("weight", F.lit(1.0))
-    sym = sym.repartition(n_part, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count()
+    # what the round body reads, prepared by ``setup``; a call whose
+    # final round is stored (a memo hit) never runs it
+    pinned: list[DataFrame] = []
+    sym, broadcast_labels = None, False
 
-    # Broadcast the vertex-sized label table into the gather join while
-    # it is small (same trade as pagerank's broadcast_ranks): the big
-    # edge stream is then never exchanged OR sorted per round — the only
-    # corpus-sized shuffle left is the map-side-combinable vote count.
-    # Above the switch the shuffle-hash gather takes over (building a
-    # multi-million-row broadcast is serial driver work that caps
-    # scaling).
-    broadcast_labels = broadcasts(graph.vertices.count())
+    def setup() -> DataFrame:
+        nonlocal sym, broadcast_labels
+        g = graph.with_weight()
+        e = g.edges.select("src", "dst", "weight").where(F.col("src") != F.col("dst"))
+        sym = e.unionByName(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
+        )
+        if not weighted:
+            sym = sym.withColumn("weight", F.lit(1.0))
+        # no count here: round 1's change check fills the cache
+        sym = sym.repartition(n_part, "src").persist(StorageLevel.MEMORY_AND_DISK)
+        pinned.append(sym)
+        # Broadcast the vertex-sized label table into the gather join
+        # while it is small (same trade as pagerank's broadcast_ranks):
+        # the big edge stream is then never exchanged OR sorted per
+        # round — the only corpus-sized shuffle left is the
+        # map-side-combinable vote count. Above the switch the
+        # shuffle-hash gather takes over (building a multi-million-row
+        # broadcast is serial driver work that caps scaling).
+        broadcast_labels = broadcasts(graph.vertices.count())
+        return graph.vertices.select("id", F.col("id").alias("label"))
 
     def step(labels: DataFrame, k: int) -> DataFrame:
         # gather neighbor labels onto dst; per-(dst,label) weight sums are
@@ -92,7 +101,7 @@ def label_propagation(
 
     params = {"max_iterations": max_iterations, "weighted": weighted}
     return run_supersteps(
-        graph.vertices.select("id", F.col("id").alias("label")),
+        setup,
         step,
         limit=max_iterations,
         changed=changed_rows("label"),
@@ -100,5 +109,5 @@ def label_propagation(
         key=partial(step_key, input_fingerprint or "anon", "lpa", params),
         checkpoint=checkpoint,
         checkpoint_every=checkpoint_every,
-        pinned=[sym],
+        pinned=pinned,
     )

@@ -46,7 +46,7 @@ from pyspark.storagelevel import StorageLevel
 from lynxkite_spark.graph import Graph
 from lynxkite_spark.plans.checkpoint import CheckpointManager, step_key
 from lynxkite_spark.plans.iterate import PREV, broadcasts, run_supersteps
-from lynxkite_spark.plans.skew import hot_keys, hybrid_join
+from lynxkite_spark.plans.skew import hybrid_join
 from lynxkite_spark.plans.spread import plan_is_expensive as _plan_is_expensive
 
 
@@ -68,88 +68,98 @@ def pagerank(
     until ``max |Δrank| < tol`` or ``max_iterations``.
     """
     spark = graph.vertices.sparkSession
-    # Pin an expensive-to-recompute RAW edge table once up front — the
-    # setup below references it through several derived plans (edge
-    # normalization, source set, and — for from_edges graphs — the
-    # vertex union), and caching the raw table lets every one of those
-    # subtrees hit the cache (a cache of the filtered/weighted view
-    # would not match the vertex union's plan). Cheap inputs (bare
-    # scans / checkpointed relations) skip the extra copy.
-    edges_pinned = None
-    if _plan_is_expensive(graph.edges):
-        edges_pinned = graph.edges.persist(StorageLevel.MEMORY_AND_DISK)
-        graph = replace(graph, edges=edges_pinned)
-    g = graph.with_weight()
-    edges = g.edges.select("src", "dst", "weight").where(F.col("weight") > 0.0)
-    if direction == "all":
-        edges = edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-        )
-    elif direction == "incoming":
-        edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
-
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Normalize per source in ONE pass with a window sum over the
-    # src-partitioned edges (the groupBy+join-back shape scanned the
-    # input twice and paid a second exchange + join); stays partitioned
-    # by src for all iterations. Weight sums are per-src float adds in
-    # sort order — for the constant-1.0 and integer-count weights every
-    # caller uses, the totals are exact, so values are unchanged.
-    from pyspark.sql import Window as W
+    if skew_threshold is None:
+        from lynxkite_spark.session import HOT_KEY_THRESHOLD
 
-    w_out = F.sum("weight").over(W.partitionBy("src"))
-    en = (
-        edges.repartition(n_part, "src")
-        .select("src", "dst", (F.col("weight") / w_out).alias("wn"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # rank state carries has_out so the dangling-mass total needs no pass
-    # over the gathered contributions: per-src normalized weights sum to 1,
-    # so Σ incoming = damping · Σ rank over non-dangling vertices — an
-    # exact algebraic identity that turns the global total into a scan of
-    # the (small, cached) rank table instead of a second consumption of
-    # the expensive gather join.
-    en.count()  # materialize the normalized edges once
-    srcs = (
-        en.select(F.col("src").alias("id"))  # from the cache, not the input
-        .distinct()
-        .withColumn("has_out", F.lit(True))
-    )
-    vertices = (
-        g.vertices.select("id")
-        .join(srcs, "id", "left")
-        .select("id", F.coalesce("has_out", F.lit(False)).alias("has_out"))
-        .repartition(n_part, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_vertices = vertices.count()
-    if edges_pinned is not None:
-        edges_pinned.unpersist()
+        skew_threshold = HOT_KEY_THRESHOLD
+    # what the round body reads, prepared by ``setup``; a call whose
+    # final round is stored (a memo hit) never runs it
+    pinned: list[DataFrame] = []
+    en = hot = None
+    n_vertices, broadcast_ranks, use_hybrid = 0, False, False
 
-    # localCheckpoint output (LogicalRDD) carries no size stats, so
-    # Catalyst can't see that the rank table is broadcastable — hint it
-    # explicitly while |V| is small. Building a broadcast relation is a
-    # SERIAL driver-side step repeated every iteration; measured on this
-    # box it stops paying for itself around a few hundred thousand rows,
-    # and past that it caps scaling (the parallel join is fast, the
-    # broadcast build is not). Above the switch the co-partitioned
-    # shuffle join (or the hybrid hot-key split) takes over.
-    broadcast_ranks = broadcasts(n_vertices)
+    def setup() -> DataFrame:
+        nonlocal en, hot, n_vertices, broadcast_ranks, use_hybrid
+        # Pin an expensive-to-recompute RAW edge table once up front —
+        # the set-up references it through several derived plans (edge
+        # normalization, source set, and — for from_edges graphs — the
+        # vertex union), and caching the raw table lets every one of
+        # those subtrees hit the cache (a cache of the filtered/weighted
+        # view would not match the vertex union's plan). Cheap inputs
+        # (bare scans / checkpointed relations) skip the extra copy.
+        g = graph
+        edges_pinned = None
+        if _plan_is_expensive(g.edges):
+            edges_pinned = g.edges.persist(StorageLevel.MEMORY_AND_DISK)
+            pinned.append(edges_pinned)
+            g = replace(g, edges=edges_pinned)
+        g = g.with_weight()
+        edges = g.edges.select("src", "dst", "weight").where(F.col("weight") > 0.0)
+        if direction == "all":
+            edges = edges.unionByName(
+                edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
+            )
+        elif direction == "incoming":
+            edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
 
-    # hot-key set for the gather join, computed once (HybridRDD semantics);
-    # when no key crosses the threshold the plain shuffle join is used —
-    # the hybrid split costs two extra joins per iteration for nothing.
-    # Skipped entirely in broadcast mode (a broadcast join has no skew to
-    # split — the aggregate pass would be paid for nothing).
-    use_hybrid = False
-    hot = None
-    if not broadcast_ranks:
-        if skew_threshold is None:
-            from lynxkite_spark.session import HOT_KEY_THRESHOLD
+        # Normalize per source in ONE pass with a window sum over the
+        # src-partitioned edges (the groupBy+join-back shape scanned the
+        # input twice and paid a second exchange + join); stays
+        # partitioned by src for all iterations. Weight sums are per-src
+        # float adds in sort order — for the constant-1.0 and
+        # integer-count weights every caller uses, the totals are exact,
+        # so values are unchanged.
+        from pyspark.sql import Window as W
 
-            skew_threshold = HOT_KEY_THRESHOLD
-        hot = hot_keys(en, "src", skew_threshold).persist(StorageLevel.MEMORY_AND_DISK)
-        use_hybrid = hot.count() > 0
+        w_out = F.sum("weight").over(W.partitionBy("src"))
+        en = (
+            edges.repartition(n_part, "src")
+            .select("src", "dst", (F.col("weight") / w_out).alias("wn"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        pinned.append(en)
+        # rank state carries has_out so the dangling-mass total needs no
+        # pass over the gathered contributions: per-src normalized
+        # weights sum to 1, so Σ incoming = damping · Σ rank over
+        # non-dangling vertices — an exact algebraic identity that turns
+        # the global total into a scan of the (small, cached) rank table
+        # instead of a second consumption of the expensive gather join.
+        # ``deg`` (each source's edge count, from the cache, not the
+        # input) also names the hot keys, so one aggregate over this
+        # table — which fills both caches — is the whole set-up action.
+        srcs = en.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
+        vertices = (
+            g.vertices.select("id")
+            .join(srcs, "id", "left")
+            .select("id", F.col("deg").isNotNull().alias("has_out"), F.coalesce("deg", F.lit(0)).alias("deg"))
+            .repartition(n_part, "id")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        pinned.append(vertices)
+        n_vertices, max_deg = vertices.agg(F.count(F.lit(1)), F.max("deg")).first()
+        if edges_pinned is not None:
+            edges_pinned.unpersist()
+
+        # localCheckpoint output (LogicalRDD) carries no size stats, so
+        # Catalyst can't see that the rank table is broadcastable — hint
+        # it explicitly while |V| is small. Building a broadcast relation
+        # is a SERIAL driver-side step repeated every iteration; measured
+        # on this box it stops paying for itself around a few hundred
+        # thousand rows, and past that it caps scaling (the parallel join
+        # is fast, the broadcast build is not). Above the switch the
+        # co-partitioned shuffle join (or the hybrid hot-key split) takes
+        # over.
+        broadcast_ranks = broadcasts(n_vertices)
+        # hot keys of the gather join (HybridRDD semantics: sources with
+        # more than ``skew_threshold`` edges, the set ``hot_keys(en,
+        # "src", skew_threshold)`` gives); when no key crosses the
+        # threshold the plain shuffle join is used — the hybrid split
+        # costs two extra joins per iteration for nothing. A broadcast
+        # join has no skew to split.
+        use_hybrid = not broadcast_ranks and (max_deg or 0) > skew_threshold
+        hot = vertices.where(F.col("deg") > skew_threshold).select(F.col("id").alias("src"))
+        return vertices.select("id", "has_out", F.lit(1.0).alias("pagerank"))
 
     params = {"damping": damping, "iterations": iterations, "tol": tol, "direction": direction}
     # Convergence mode folds the dangling-mass total into the SAME
@@ -164,6 +174,9 @@ def pagerank(
 
     def step(ranks: DataFrame, k: int) -> DataFrame:
         nonlocal tot_lit
+        # the uniform share of the leaked mass; an empty graph's rank
+        # table has no rows, and the 1 only keeps the literal finite
+        n = F.lit(float(max(n_vertices, 1)))
         rank_lookup = ranks.select(F.col("id").alias("src"), "pagerank")
         if broadcast_ranks:
             gathered = en.join(F.broadcast(rank_lookup), "src")
@@ -183,7 +196,7 @@ def pagerank(
                     ranks.where(F.col("has_out")).agg(F.sum("pagerank").alias("s")).first()["s"]
                     or 0.0
                 )
-            uniform = (F.lit(float(n_vertices)) - F.lit(tot_lit)) / F.lit(float(n_vertices))
+            uniform = (n - F.lit(tot_lit)) / n
             base = ranks
         else:
             # fixed-iteration mode has no driver action per round: the
@@ -191,9 +204,7 @@ def pagerank(
             tot = ranks.where(F.col("has_out")).agg(
                 (F.sum("pagerank") * F.lit(damping)).alias("_tot")
             )
-            uniform = (
-                F.lit(float(n_vertices)) - F.coalesce(F.col("_tot"), F.lit(0.0))
-            ) / F.lit(float(n_vertices))
+            uniform = (n - F.coalesce(F.col("_tot"), F.lit(0.0))) / n
             base = ranks.crossJoin(F.broadcast(tot))
         return base.join(
             contrib if broadcast_ranks else contrib.hint("shuffle_hash"),
@@ -215,19 +226,19 @@ def pagerank(
             F.sum(F.when(F.col("has_out"), F.col("pagerank"))).alias("s"),
         ).first()
         tot_lit = damping * float(row["s"] or 0.0)
-        return row["d"] is not None and row["d"] < tol, {"max_delta": row["d"]}
+        # an empty rank table has no delta: it is converged
+        return row["d"] is None or row["d"] < tol, {"max_delta": row["d"]}
 
     limit = iterations if iterations is not None else max_iterations
     ranks = run_supersteps(
-        vertices.select("id", "has_out", F.lit(1.0).alias("pagerank")),
+        setup,
         step,
-        # an empty graph runs no rounds (the uniform share divides by |V|)
-        limit=limit if n_vertices else 0,
+        limit=limit,
         changed=delta if converge else None,
         partition_by="id",
         key=partial(step_key, input_fingerprint or "anon", "pagerank", params),
         checkpoint=checkpoint,
         checkpoint_every=checkpoint_every,
-        pinned=[en, vertices] + ([hot] if hot is not None else []),
+        pinned=pinned,
     )
     return ranks.select("id", "pagerank")

@@ -24,6 +24,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def step_key(input_fingerprint: str, op: str, params: dict, iteration: int | None = None) -> str:
@@ -53,6 +54,17 @@ class CheckpointManager:
     ``save(df, key)`` writes the data plus a lineage sidecar;
     ``load(key)`` returns the DataFrame if the step already ran
     (the memoization hit path); ``metrics(key)`` returns the sidecar.
+
+    Two limits of the store, stated here once:
+
+    * ``root`` is a local-filesystem path. Keys are directories handled
+      with ``os.path``, ``shutil`` and ``os.replace``, not Hadoop
+      ``FileSystem`` paths, so an HDFS or object-store root does not
+      work (on a cluster, ``root`` must be a mount every node sees).
+    * The sidecar carries the table's schema, and every read-back and
+      ``load`` passes it to the reader, so no read runs Spark's schema
+      inference job. A sidecar written without a schema still loads;
+      its read infers the schema.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -71,7 +83,8 @@ class CheckpointManager:
         tmp = path + ".tmp"
         shutil.rmtree(tmp, ignore_errors=True)
         df.write.mode("overwrite").parquet(tmp)
-        out = self.spark.read.parquet(tmp)
+        schema = df.schema.jsonValue()
+        out = self._read(tmp, schema)
         # per-partition lineage: row count + order-insensitive checksum per file
         lineage_rows = (
             out.select(
@@ -91,17 +104,23 @@ class CheckpointManager:
             ],
             "total_rows": int(sum(r["rows"] for r in lineage_rows)),
             "metrics": metrics or {},
+            "schema": schema,
         }
         shutil.rmtree(path, ignore_errors=True)
         os.replace(tmp, path)
         with open(os.path.join(path, "_lineage.json"), "w") as f:
             json.dump(sidecar, f, indent=1)
-        return self.spark.read.parquet(path)
+        return self._read(path, schema)
+
+    def _read(self, path: str, schema: dict | None) -> DataFrame:
+        reader = self.spark.read if schema is None else self.spark.read.schema(StructType.fromJson(schema))
+        return reader.parquet(path)
 
     def load(self, key: str) -> DataFrame | None:
-        if not self.exists(key):
+        sidecar = self.metrics(key)
+        if sidecar is None:
             return None
-        return self.spark.read.parquet(self._dir(key))
+        return self._read(self._dir(key), sidecar.get("schema"))
 
     def metrics(self, key: str) -> dict | None:
         p = os.path.join(self._dir(key), "_lineage.json")

@@ -6,14 +6,20 @@ connected components, label propagation and k-core supply only that
 round body, a change predicate and an output projection; the harness
 around the plan is written here, once:
 
-  * resume — scan newest-first for a stored round, then materialize it;
+  * memo hit and resume — scan newest-first for a stored round, before
+    the operator's set-up: a final stored round (the iteration cap, or
+    the round a change check stopped at) is returned as read from the
+    store, with no set-up at all; an earlier one is materialized and
+    the remaining rounds run from it;
   * lineage cut — ``localCheckpoint(eager=False)`` every round (a round
     references the previous state more than once, so an uncut chain
     grows Catalyst analysis time exponentially, see ``materialize``);
   * change check — the operator's ``changed(new, old)`` is the round's
     one driver action; it returns a stop flag and a metrics record;
-  * checkpoint cadence — save every ``checkpoint_every`` rounds and at
-    the iteration cap, with the per-round records in the sidecar;
+  * checkpoint cadence — save every ``checkpoint_every`` rounds, at
+    the iteration cap and at the round a change check stops, with the
+    per-round records in the sidecar (the stopping one marked
+    ``"stop": true``);
   * cache release — every pinned cache is unpersisted on every exit,
     a raising round included.
 
@@ -64,7 +70,7 @@ def changed_rows(col: str) -> Callable[[DataFrame, DataFrame], tuple[bool, dict]
 
 
 def run_supersteps(
-    state: DataFrame,
+    state: DataFrame | Callable[[], DataFrame],
     step: Callable[[DataFrame, int], DataFrame],
     *,
     limit: int,
@@ -78,37 +84,49 @@ def run_supersteps(
     """Run ``state = step(state, k)`` for rounds ``k = 1..limit`` and
     return the final state.
 
+    ``state`` is the starting state, or the operator's set-up: a
+    callable that prepares what ``step`` reads and returns the starting
+    state. The driver calls it only when a round remains to run.
     ``changed(new, old)`` runs after every round and returns
     ``(stop, record)``; with ``changed=None`` every round runs and none
     triggers an action. ``partition_by`` hash-partitions the starting
     state (stored or initial) before it is materialized. With a
-    ``checkpoint``, round ``k`` is stored under ``key(k)`` and a rerun
-    resumes from the newest stored round. ``pinned`` caches are
-    unpersisted when the driver returns or raises.
+    ``checkpoint``, round ``k`` is stored under ``key(k)``; a rerun
+    returns a final stored round as it was stored and resumes from any
+    other. ``pinned`` caches are unpersisted when the driver returns or
+    raises; it is read then, so a set-up may append to it.
     """
     try:
-        start, history = 0, []
+        # the newest stored round; reading it runs no Spark job (the
+        # store keeps each table's schema)
+        start, stored, history = 0, None, []
         if checkpoint is not None:
             for k in range(limit, 0, -1):
                 stored = checkpoint.load(key(k))
                 if stored is not None:
-                    state, start = stored, k
-                    history = checkpoint.metrics(key(k))["metrics"].get("history", [])
+                    start, history = k, checkpoint.metrics(key(k))["metrics"].get("history", [])
                     break
+        if stored is not None and (start == limit or (history and history[-1].get("stop"))):
+            return stored  # memo hit: the run's last round, nothing to prepare
+        if callable(state):
+            state = state()
+        if stored is not None:
+            state = stored
         if partition_by is not None:
             n_part = int(state.sparkSession.conf.get("spark.sql.shuffle.partitions"))
             state = state.repartition(n_part, partition_by)
         state = materialize(state)
         for k in range(start + 1, limit + 1):
             new = step(state, k)
-            save = checkpoint is not None and (k % checkpoint_every == 0 or k == limit)
             stop, record = False, {}
             if changed is not None:
                 new = new.localCheckpoint(eager=False)  # materialized by the check
                 stop, record = changed(new, state)
                 if PREV in new.columns:
                     new = new.drop(PREV)
-            history.append({"iteration": k, **record})
+            history.append({"iteration": k, **record, **({"stop": True} if stop else {})})
+            # the stopping round is stored too, so a rerun is a memo hit
+            save = checkpoint is not None and (stop or k % checkpoint_every == 0 or k == limit)
             if save:
                 new = checkpoint.save(new, key(k), metrics={"iteration": k, "history": history})
             if changed is None:

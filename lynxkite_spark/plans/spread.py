@@ -43,6 +43,11 @@ def opaque_true(df: DataFrame | None = None) -> Column:
     return F.monotonically_increasing_id() >= F.lit(0)
 
 
+# Logical plan node classes whose re-execution repeats real work: joins
+# (``Join``, ``LateralJoin``, ``AsOfJoin``), aggregations, windows,
+# generators (``explode``) and Python stages (``MapInPandas``,
+# ``FlatMapGroupsInPandas``, ``MapInArrow``, ...). Matched against class
+# names, never against the plan's text, which also prints column names.
 _EXPENSIVE_NODES = (
     "Join", "Aggregate", "Window", "Generate", "InPandas", "InArrow",
     "EvalPython", "Deduplicate",
@@ -55,12 +60,16 @@ def plan_is_expensive(df: DataFrame) -> bool:
     Iterative operators use this to decide whether to pin their input
     once up front: a bare (possibly cached/checkpointed) scan is cheaper
     to re-read than to copy, while a derived edge table re-runs its
-    whole derivation on every reference."""
-    try:
-        s = df._jdf.queryExecution().analyzed().toString()
-    except Exception:  # pragma: no cover - defensive
-        return False
-    return any(k in s for k in _EXPENSIVE_NODES)
+    whole derivation on every reference. The analyzed plan is walked
+    node by node (subquery plans included)."""
+    nodes = [df._jdf.queryExecution().analyzed()]
+    while nodes:
+        node = nodes.pop()
+        if any(k in node.getClass().getSimpleName() for k in _EXPENSIVE_NODES):
+            return True
+        for seq in (node.children(), node.subqueries()):
+            nodes.extend(seq.apply(i) for i in range(seq.size()))
+    return False
 
 
 def spread_small(df: DataFrame, factor: int = 1) -> DataFrame:

@@ -177,10 +177,15 @@ def test_checkpoint_resume(spark, corpus, tmp_path):
     assert set(ranks_resumed) == set(ranks_full)
     assert all(abs(ranks_resumed[k] - ranks_full[k]) < 1e-12 for k in ranks_full)
 
-    # memoization hit: both checkpoints exist → load, no recompute —
-    # loads the parquet written by the resumed run verbatim, hence
-    # bit-identical to THAT run
-    again = pagerank(g, iterations=6, tol=None, checkpoint=cp, checkpoint_every=3, input_fingerprint=fp)
+    # memoization hit: the final round is stored, so the call submits
+    # no Spark job and returns the parquet written by the resumed run
+    # verbatim, hence bit-identical to THAT run
+    from tests.test_iterate import _jobs
+
+    again, jobs = _jobs(
+        spark, lambda: pagerank(g, iterations=6, tol=None, checkpoint=cp, checkpoint_every=3, input_fingerprint=fp)
+    )
+    assert jobs == 0
     assert {r["id"]: r["pagerank"] for r in again.collect()} == ranks_resumed
 
 

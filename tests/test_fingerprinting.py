@@ -94,6 +94,16 @@ def test_similarities_match_reference_fold(spark):
         assert got[k] == pytest.approx(expected[k], abs=1e-12), k
 
 
+def test_fingerprinting_returns_a_materialized_matching(spark):
+    """The result is materialized before the similarity cache is
+    released: the caller's action reads it, it does not score the
+    candidates again."""
+    cand_df, le_df, re_df = _instance(spark)[:3]
+    out = fingerprinting(cand_df, le_df, re_df, min_overlap=1)
+    assert "Join" not in out._jdf.queryExecution().optimizedPlan().toString()
+    assert out.count() > 0
+
+
 def test_stable_marriage_is_stable_and_one_to_one(spark):
     cand_df, le_df, re_df, cand, le, re_ = _instance(spark)
     sims = {

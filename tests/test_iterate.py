@@ -248,3 +248,109 @@ def test_repeated_calls_reuse_their_generated_code(spark):
         call().collect()
         added[name] = compiles.getCount() - before
     assert added == {name: 0 for name in calls}
+
+
+def _jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn submitted)``, counted by job group."""
+    import uuid
+
+    sc, group = spark.sparkContext, f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed by the listener bus
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_converged_run_is_stored_and_its_rerun_is_a_memo_hit(spark, tmp_path):
+    """A run that the change check stops stores its stopping round, off
+    the cadence, marked ``stop``; a rerun returns it without calling the
+    set-up or the round body."""
+    from lynxkite_spark.plans.iterate import PREV, changed_rows
+
+    cp = CheckpointManager(spark, str(tmp_path / "ckpt"))
+    calls = {"setup": 0, "step": 0}
+
+    def setup():
+        calls["setup"] += 1
+        return spark.range(4).select("id", F.lit(0).alias("x"))
+
+    def step(df, k):
+        # x climbs to 2 and stays there: round 3 changes nothing
+        calls["step"] += 1
+        return df.select("id", F.least(F.col("x") + 1, F.lit(2)).alias("x"), F.col("x").alias(PREV))
+
+    def run():
+        return run_supersteps(
+            setup, step, limit=10, changed=changed_rows("x"), key=lambda k: f"x-{k}", checkpoint=cp, checkpoint_every=5
+        )
+
+    assert sorted(r["x"] for r in run().collect()) == [2, 2, 2, 2]
+    assert calls == {"setup": 1, "step": 3}
+    assert [k for k in range(1, 11) if cp.exists(f"x-{k}")] == [3]
+    history = cp.metrics("x-3")["metrics"]["history"]
+    assert [(h["iteration"], h.get("stop", False)) for h in history] == [(1, False), (2, False), (3, True)]
+
+    calls.update(setup=0, step=0)
+    out, jobs = _jobs(spark, run)
+    assert calls == {"setup": 0, "step": 0}
+    assert jobs == 0
+    assert sorted(r["x"] for r in out.collect()) == [2, 2, 2, 2]
+
+
+def test_store_reads_take_the_schema_from_the_sidecar(spark, tmp_path):
+    """``save`` and ``load`` run no schema inference job, and a sidecar
+    written without a schema still loads."""
+    import json
+
+    cp = CheckpointManager(spark, str(tmp_path / "ckpt"))
+    df = spark.range(6).select("id", (F.col("id") * 0.5).alias("v")).localCheckpoint(eager=True)
+    saved, save_jobs = _jobs(spark, lambda: cp.save(df, "t"))
+    loaded, load_jobs = _jobs(spark, lambda: cp.load("t"))
+    # the write and the lineage aggregate's two query stages; reading
+    # the schema from each parquet footer added one job per read
+    assert (save_jobs, load_jobs) == (3, 0)
+    assert loaded.schema.simpleString() == "struct<id:bigint,v:double>"
+    want = sorted(tuple(r) for r in df.collect())
+    assert sorted(tuple(r) for r in saved.collect()) == want == sorted(tuple(r) for r in loaded.collect())
+
+    sidecar = tmp_path / "ckpt" / "t" / "_lineage.json"
+    meta = json.loads(sidecar.read_text())
+    del meta["schema"]
+    sidecar.write_text(json.dumps(meta))
+    assert sorted(tuple(r) for r in cp.load("t").collect()) == want
+
+
+def _memo_calls():
+    from lynxkite_spark.operators.components import connected_components
+    from lynxkite_spark.operators.labelprop import label_propagation
+    from lynxkite_spark.operators.pagerank import pagerank
+
+    return {
+        "pagerank_fixed": lambda g, cp: pagerank(g, iterations=4, tol=None, checkpoint=cp, checkpoint_every=3),
+        "pagerank_tol": lambda g, cp: pagerank(g, tol=1e-3, checkpoint=cp),
+        "lpa": lambda g, cp: label_propagation(g, checkpoint=cp),
+        "star": lambda g, cp: connected_components(g, algorithm="star", checkpoint=cp),
+        "minlabel": lambda g, cp: connected_components(g, algorithm="minlabel", checkpoint=cp),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_memo_calls()))
+def test_memo_hit_runs_no_job_and_pins_nothing(spark, tmp_path, name):
+    """A call whose final round is stored (the cap, or the round its
+    change check stopped at) does no set-up: it submits no Spark job
+    before the caller's action, pins no cache, and returns the rows the
+    storing run returned."""
+    from tests.test_hyperball import _er_graph
+
+    call = _memo_calls()[name]
+    g = _er_graph(spark, n=120)
+    cp = CheckpointManager(spark, str(tmp_path / "ckpt"))
+    first = sorted(tuple(r) for r in call(g, cp).collect())
+    spark.catalog.clearCache()
+    out, jobs = _jobs(spark, lambda: call(g, cp))
+    assert jobs == 0
+    assert _cache_empty(spark)
+    assert sorted(tuple(r) for r in out.collect()) == first

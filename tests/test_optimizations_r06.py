@@ -48,6 +48,16 @@ def test_plan_is_expensive_heuristic(spark, tmp_path):
     assert plan_is_expensive(scan.groupBy("id").count())
 
 
+def test_plan_is_expensive_ignores_column_names(spark):
+    """Node classes decide, not the plan's text: a bare scan whose
+    columns are named like plan nodes is cheap to re-read."""
+    named = spark.createDataFrame([(1, 2, 3, 4)], "Generated long, Joined long, Window long, Aggregate long")
+    assert not plan_is_expensive(named)
+    assert not plan_is_expensive(named.localCheckpoint(eager=True).select("Generated"))
+    assert plan_is_expensive(named.select(F.explode(F.array("Generated", "Joined"))))
+    assert plan_is_expensive(named.where(F.col("Joined") > F.lit(0)).join(named.select("Window"), "Window"))
+
+
 def test_exact_dedup_single_hash_pass_and_values(spark, docs):
     from lynxkite_spark.functions.dedup import exact_duplicates
 

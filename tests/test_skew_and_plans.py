@@ -105,9 +105,12 @@ def test_pagerank_join_paths_equivalent(spark, monkeypatch):
     r_bcast = {r["id"]: r["pagerank"] for r in pagerank(g, iterations=5, tol=None).collect()}
     monkeypatch.setattr(iterate, "BROADCAST_MAX_VERTICES", 0)
     r_shuffle = {r["id"]: r["pagerank"] for r in pagerank(g, iterations=5, tol=None).collect()}
-    assert set(r_bcast) == set(r_shuffle)
+    # sources with more than 8 edges are hot: the hybrid split
+    r_hybrid = {r["id"]: r["pagerank"] for r in pagerank(g, iterations=5, tol=None, skew_threshold=8).collect()}
+    assert set(r_bcast) == set(r_shuffle) == set(r_hybrid)
     for k in r_bcast:
         assert r_bcast[k] == pytest.approx(r_shuffle[k], abs=1e-12)
+        assert r_hybrid[k] == pytest.approx(r_shuffle[k], abs=1e-12)
 
 
 def test_shuffle_hash_hint_respected(spark):
