@@ -28,16 +28,17 @@ def normalized(text: Column) -> Column:
     return F.lower(F.regexp_replace(F.trim(text), r"\s+", " "))
 
 
-def portable_hash64(col: Column, seed: int = 0) -> Column:
+def portable_hash64(col: Column, seed: int | Column = 0) -> Column:
     """Engine-portable 60-bit hash: the first 15 hex digits of
-    md5(value || '|' || seed), parsed base-16. Spark computes it as
+    md5(value || '|' || seed), parsed base-16; ``seed`` may be a column,
+    whose string form is hashed as an int seed's is. Spark computes it as
     conv(substr(md5(..), 1, 15), 16, 10); DuckDB as
     ('0x' || substr(md5(..), 1, 15))::BIGINT — verified identical.
     Used by the oracle-checked gate paths so the DuckDB oracle can
     replay the exact same minhash/simhash pipeline; ``xxhash64`` stays
     the fast default everywhere else (one JVM intrinsic vs an md5)."""
     return F.conv(
-        F.substring(F.md5(F.concat(col.cast("string"), F.lit(f"|{seed}"))), 1, 15),
+        F.substring(F.md5(F.concat(col.cast("string"), F.lit("|"), F.lit(seed).cast("string"))), 1, 15),
         16,
         10,
     ).cast("long")

@@ -46,28 +46,33 @@ def _sample_roots(vertices: DataFrame, k: int, seed: int) -> DataFrame:
 
 
 def _forward_bfs(
-    e: DataFrame, roots: DataFrame, max_depth: int
+    e: DataFrame, sources: DataFrame, max_depth: int
 ) -> tuple[DataFrame, int]:
-    """Multi-root BFS with path counting on the superstep driver.
-    Returns (state, reached_depth); state = DataFrame[root, id, d, sigma]
-    for every reached (root, id). Round k expands the depth-(k-1) rows,
-    drops the (root, id) pairs already reached and unions the rest in;
-    it stops at the first round that reaches nothing."""
+    """Multi-root BFS with path counting on the superstep driver, from
+    ``sources`` = DataFrame[root, id] (each root's depth-0 vertices).
+    Returns (state, reached_depth); state = DataFrame[root, id, d,
+    sigma, depth] for every reached (root, id), where ``depth`` is the
+    depth reached, the same on every row. A round expands the rows at
+    ``d == depth``, drops the (root, id) pairs already reached and
+    unions the rest in one level deeper; it stops at the first round
+    that reaches nothing."""
     depth, stopped_at = 0, None
 
-    def step(state: DataFrame, k: int) -> DataFrame:
-        frontier = state.where(F.col("d") == k - 1)
+    def step(state: DataFrame, _: int) -> DataFrame:
+        frontier = state.where(F.col("d") == F.col("depth"))
         nxt = (
             frontier.join(e, frontier.id == e.src)
             .groupBy("root", F.col("dst").alias("nid"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .select("root", F.col("nid").alias("id"), F.lit(k).alias("d"), "sigma")
+            .agg(F.sum("sigma").alias("sigma"), (F.max("d") + 1).alias("d"))
+            .select("root", F.col("nid").alias("id"), "d", "sigma", F.col("d").alias("depth"))
         )
-        return state.unionByName(nxt.join(state.select("root", "id"), ["root", "id"], "left_anti"))
+        return state.select("root", "id", "d", "sigma", (F.col("depth") + 1).alias("depth")).unionByName(
+            nxt.join(state.select("root", "id"), ["root", "id"], "left_anti")
+        )
 
     def reached(new: DataFrame, old: DataFrame) -> tuple[bool, dict]:
         nonlocal depth, stopped_at
-        if new.where(F.col("d") == depth + 1).limit(1).count() == 0:
+        if new.where(F.col("d") == F.col("depth")).count() == 0:
             # the round only appended an empty frontier: keep the state
             # before it, whose size estimate has one join factor fewer
             stopped_at = old
@@ -76,7 +81,7 @@ def _forward_bfs(
         return False, {"depth": depth}
 
     state = run_supersteps(
-        roots.select("root", F.col("root").alias("id"), F.lit(0).alias("d"), F.lit(1.0).alias("sigma")),
+        sources.select("root", "id", F.lit(0).alias("d"), F.lit(1.0).alias("sigma"), F.lit(0).alias("depth")),
         step,
         limit=max_depth,
         changed=reached,
@@ -113,7 +118,7 @@ def _sampled_bfs(
         else:
             roots = roots.select(F.col(roots.columns[0]).alias("root"))
             k_eff = roots.count()
-        state, depth = _forward_bfs(e, roots.localCheckpoint(eager=True), max_depth)
+        state, depth = _forward_bfs(e, roots.select("root", F.col("root").alias("id")), max_depth)
         yield e, vertices, n, k_eff, state, depth
     finally:
         e.unpersist()
@@ -133,11 +138,11 @@ def betweenness_centrality(
     DataFrame[id, betweenness] — δ-dependencies summed over k roots,
     scaled by n/k (exact when k ≥ n)."""
     with _sampled_bfs(graph, k, max_depth, seed, roots) as (e, vertices, n, k_eff, state, depth):
-        # backward accumulation, deepest level first; delta starts at 0
-        delta = state.select("root", "id", "d", "sigma", F.lit(0.0).alias("delta"))
-        delta = delta.localCheckpoint(eager=True)
-        for d in range(depth - 1, -1, -1):
-            succ = delta.where(F.col("d") == d + 1).select(
+        # backward accumulation, deepest level first: round r settles
+        # level lvl = depth - r, a column, so every depth runs one plan;
+        # delta starts at 0
+        def back(delta: DataFrame, _: int) -> DataFrame:
+            succ = delta.where(F.col("d") == F.col("lvl") + 1).select(
                 "root",
                 F.col("id").alias("dst"),
                 F.col("sigma").alias("sigma_w"),
@@ -147,26 +152,24 @@ def betweenness_centrality(
             contrib = (
                 succ.join(e, "dst")
                 .groupBy("root", F.col("src").alias("id"))
-                .agg(
-                    F.sum((F.lit(1.0) + F.col("delta_w")) / F.col("sigma_w")).alias("_c")
-                )
+                .agg(F.sum((F.lit(1.0) + F.col("delta_w")) / F.col("sigma_w")).alias("_c"))
             )
-            delta = (
-                delta.join(contrib.hint("shuffle_hash"), ["root", "id"], "left")
-                .select(
-                    "root",
-                    "id",
-                    "d",
-                    "sigma",
-                    F.when(
-                        F.col("d") == d,
-                        F.col("delta") + F.col("sigma") * F.coalesce("_c", F.lit(0.0)),
-                    )
-                    .otherwise(F.col("delta"))
-                    .alias("delta"),
-                )
-                .localCheckpoint(eager=True)
+            return delta.join(contrib.hint("shuffle_hash"), ["root", "id"], "left").select(
+                "root",
+                "id",
+                "d",
+                "sigma",
+                F.when(F.col("d") == F.col("lvl"), F.col("delta") + F.col("sigma") * F.coalesce("_c", F.lit(0.0)))
+                .otherwise(F.col("delta"))
+                .alias("delta"),
+                (F.col("lvl") - 1).alias("lvl"),
             )
+
+        delta = run_supersteps(
+            state.select("root", "id", "d", "sigma", F.lit(0.0).alias("delta"), (F.col("depth") - 1).alias("lvl")),
+            back,
+            limit=depth,
+        )
     dep = (
         delta.where(F.col("d") > 0)
         .groupBy("id")

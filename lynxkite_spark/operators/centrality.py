@@ -139,7 +139,7 @@ def _reached(graph: Graph, max_distance: int) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     try:
-        state, _ = _forward_bfs(e, graph.vertices.select(F.col("id").alias("root")), max_distance)
+        state, _ = _forward_bfs(e, graph.vertices.select(F.col("id").alias("root"), "id"), max_distance)
     finally:
         e.unpersist()
     return state.select("root", F.col("id").alias("v"), "d")

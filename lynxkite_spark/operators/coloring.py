@@ -32,7 +32,8 @@ def greedy_coloring(graph: Graph, max_iterations: int = 50) -> DataFrame:
         remaining = graph.vertices.select("id", pri.alias("pri")).localCheckpoint(eager=False)
         colored = None  # DataFrame[id, color]
         for _ in range(max_iterations):
-            if remaining.limit(1).count() == 0:
+            # the count fills the lazy checkpoint; a LIMIT would compile anew on every call
+            if remaining.count() == 0:
                 break
             # a vertex is a local max if no *uncolored* neighbor has higher priority
             nbr = sym.join(

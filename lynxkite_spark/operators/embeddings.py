@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lynxkite_spark.graph import Graph
+from lynxkite_spark.plans.iterate import run_supersteps
 
 
 def random_walks(
@@ -70,30 +71,17 @@ def random_walks(
         F.col("id").alias("cur"),
         F.array(F.col("id").cast("string")).alias("walk"),
     )
-    for step in range(walk_length - 1):
-        walkers = (
+
+    def step(walkers: DataFrame, _: int) -> DataFrame:
+        # the step number is size(walk) - 1: every round runs the same plan
+        pick = F.pmod(F.xxhash64("walker_id", F.size("walk") - 1, F.lit(seed)), F.size("nbrs")) + 1
+        return (
             walkers.join(adj, walkers.cur == adj.src)
-            .select(
-                "walker_id",
-                F.element_at(
-                    "nbrs",
-                    (
-                        F.pmod(
-                            F.xxhash64("walker_id", F.lit(step), F.lit(seed)),
-                            F.size("nbrs"),
-                        )
-                        + 1
-                    ).cast("int"),
-                ).alias("cur"),
-                "walk",
-            )
-            .select(
-                "walker_id", "cur",
-                F.concat("walk", F.array(F.col("cur").cast("string"))).alias("walk"),
-            )
+            .select("walker_id", F.element_at("nbrs", pick.cast("int")).alias("cur"), "walk")
+            .select("walker_id", "cur", F.concat("walk", F.array(F.col("cur").cast("string"))).alias("walk"))
         )
-        if step % 5 == 4:
-            walkers = walkers.localCheckpoint(eager=False)
+
+    walkers = run_supersteps(walkers, step, limit=walk_length - 1)
     return walkers.select("walker_id", "walk")
 
 

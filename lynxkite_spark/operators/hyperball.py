@@ -49,6 +49,9 @@ from lynxkite_spark.graph import Graph
 # alpha_m bias-correction constants (Flajolet et al. 2007)
 _ALPHA = {16: 0.673, 32: 0.697, 64: 0.709}
 _REG_CAP = 50  # Σ 2^(50-reg) over ≤ 2^9 registers stays < 2^63
+# Sketches of at most this many registers run in the wide state form
+# (one column per register); larger ones in the sparse row form.
+WIDE_MAX_M = 64
 
 
 def _alpha(m: int) -> float:
@@ -149,7 +152,6 @@ def hyperball(
     seed: int = 7,
     keep_rounds: bool = False,
     early_stop: bool = False,
-    wide_max_m: int = 64,
 ) -> DataFrame:
     """Run ``max_distance`` HyperBall rounds along edge direction
     (each vertex's ball accumulates the vertices that can REACH it —
@@ -178,10 +180,10 @@ def hyperball(
     # Registers, maxes and the exact-integer estimate are identical
     # arithmetic in both forms (zero column == absent register: it
     # contributes 2^REG_CAP to the same bigint total), so the output is
-    # bit-for-bit the sparse path's. Above ``wide_max_m`` (unusably wide
+    # bit-for-bit the sparse path's. Above ``WIDE_MAX_M`` (unusably wide
     # rows) the sparse form remains — it is the 100 TB shape for large
     # sketches, and the oracle replays it relationally either way.
-    wide = m <= wide_max_m
+    wide = m <= WIDE_MAX_M
     sparse0 = _init_registers(vertices, log2m, hash_fn, seed)
     if wide:
         state = sparse0.select(
@@ -208,6 +210,7 @@ def hyperball(
         F.col("e").alias("prev"),
         F.lit(0.0).alias("harmonic"),
         F.lit(0.0).alias("sum_d"),
+        F.lit(0.0).alias("t"),
     ).localCheckpoint(eager=True)
     rounds = [est.select("id", F.lit(0).alias("t"), "e")] if keep_rounds else None
 
@@ -284,18 +287,17 @@ def hyperball(
             # lazy checkpoint: the accumulator chain is vertex-sized and
             # referenced once per round — cutting lineage lazily drops one
             # scheduled job per round (the final action materializes the
-            # chain level by level)
+            # chain level by level); the distance ``d`` is the carried
+            # ``t`` plus one, so every round runs the same plan
+            d = F.col("t") + 1.0
             acc = (
                 acc.join(est.hint("shuffle_hash"), "id")
                 .select(
                     "id",
                     F.col("e").alias("prev"),
-                    (F.col("harmonic") + (F.col("e") - F.col("prev")) / F.lit(float(t))).alias(
-                        "harmonic"
-                    ),
-                    (F.col("sum_d") + F.lit(float(t)) * (F.col("e") - F.col("prev"))).alias(
-                        "sum_d"
-                    ),
+                    (F.col("harmonic") + (F.col("e") - F.col("prev")) / d).alias("harmonic"),
+                    (F.col("sum_d") + d * (F.col("e") - F.col("prev"))).alias("sum_d"),
+                    d.alias("t"),
                 )
                 .localCheckpoint(eager=False)
             )

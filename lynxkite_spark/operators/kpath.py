@@ -25,6 +25,7 @@ from pyspark.storagelevel import StorageLevel
 
 from lynxkite_spark.functions.dedup import portable_hash64
 from lynxkite_spark.graph import Graph
+from lynxkite_spark.plans.iterate import run_supersteps
 
 
 def kpath_centrality(
@@ -35,58 +36,65 @@ def kpath_centrality(
 ) -> DataFrame:
     """Visit counts from ``walks_per_vertex`` self-avoiding ≤ k-step
     walks per start vertex (start vertex itself not counted).
-    Returns DataFrame[id, kpath: bigint]; unvisited vertices get 0."""
-    e0 = graph.edges.select("src", "dst").where(F.col("src") != F.col("dst"))
-    e = (
-        e0.unionByName(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    Returns DataFrame[id, kpath: bigint]; unvisited vertices get 0.
+
+    Walker state [wid, pos, visited] on the superstep driver; a walker
+    with no unvisited neighbour stays in it with ``pos`` null. The step
+    number is ``size(visited)``, so every round runs the same plan."""
     vertices = graph.vertices.select("id")
-    try:
-        walkers = vertices.select(
-            F.explode(
-                F.array(*[F.lit(w) for w in range(walks_per_vertex)])
-            ).alias("w"),
-            "id",
+    pinned = []
+
+    def setup() -> DataFrame:
+        e0 = graph.edges.select("src", "dst").where(F.col("src") != F.col("dst"))
+        e = (
+            e0.unionByName(e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+            .distinct()
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        pinned.append(e)
+        return vertices.select(
+            F.explode(F.array(*[F.lit(w) for w in range(walks_per_vertex)])).alias("w"), "id"
         ).select(
             (F.col("id") * walks_per_vertex + F.col("w")).alias("wid"),
             F.col("id").alias("pos"),
             F.array("id").alias("visited"),
-        ).localCheckpoint(eager=True)
+        )
 
-        visits = []
-        for s in range(1, k + 1):
-            cand = walkers.join(e, walkers.pos == e.src).where(
-                ~F.array_contains(F.col("visited"), F.col("dst"))
+    def step(walkers: DataFrame, _: int) -> DataFrame:
+        e = pinned[0]
+        s = F.size("visited")
+        if hash_fn == "portable":
+            h = portable_hash64(F.concat_ws("_", F.col("wid"), F.col("dst")), s)
+        else:
+            h = F.xxhash64("wid", s, "dst")
+        # dead walkers (pos null) match no edge and keep their row
+        fresh = F.col("dst").isNotNull() & ~F.array_contains(F.col("visited"), F.col("dst"))
+        nxt = (
+            walkers.join(e, walkers.pos == e.src, "left")
+            .groupBy("wid")
+            .agg(
+                F.max_by("dst", F.when(fresh, F.struct(h, F.col("dst")))).alias("pos"),
+                F.first("visited").alias("visited"),
             )
-            if hash_fn == "portable":
-                h = portable_hash64(
-                    F.concat_ws("_", F.col("wid"), F.col("dst")), s
-                )
-            else:
-                h = F.xxhash64("wid", F.lit(s), "dst")
-            step = cand.groupBy("wid").agg(
-                F.max_by(F.struct(F.col("dst"), F.col("visited")), F.struct(h, F.col("dst"))).alias(
-                    "c"
-                )
-            )
-            walkers = step.select(
-                "wid",
-                F.col("c.dst").alias("pos"),
-                F.concat(F.col("c.visited"), F.array(F.col("c.dst"))).alias("visited"),
-            ).localCheckpoint(eager=True)
-            visits.append(walkers.select(F.col("pos").alias("id")))
-            if walkers.limit(1).count() == 0:
-                break
-    finally:
-        e.unpersist()
-    if not visits:
-        return vertices.select("id", F.lit(0).cast("long").alias("kpath"))
-    all_visits = visits[0]
-    for v in visits[1:]:
-        all_visits = all_visits.unionByName(v)
-    counts = all_visits.groupBy("id").agg(F.count(F.lit(1)).alias("kpath"))
+        )
+        return nxt.select(
+            "wid",
+            "pos",
+            F.when(F.col("pos").isNull(), F.col("visited"))
+            .otherwise(F.concat("visited", F.array("pos")))
+            .alias("visited"),
+        )
+
+    def live(new: DataFrame, old: DataFrame) -> tuple[bool, dict]:
+        n = new.where(F.col("pos").isNotNull()).count()
+        return n == 0, {"walkers": n}
+
+    walkers = run_supersteps(setup, step, limit=k, changed=live, pinned=pinned)
+    counts = (
+        walkers.select(F.explode(F.slice("visited", 2, F.size("visited"))).alias("id"))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("kpath"))
+    )
     return (
         vertices.join(counts, "id", "left")
         .select("id", F.coalesce("kpath", F.lit(0)).cast("long").alias("kpath"))

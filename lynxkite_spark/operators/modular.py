@@ -33,6 +33,7 @@ from pyspark.storagelevel import StorageLevel
 
 from lynxkite_spark.functions.dedup import portable_hash64
 from lynxkite_spark.graph import Graph
+from lynxkite_spark.plans.iterate import run_supersteps
 
 
 def _sym_weighted(edges: DataFrame) -> DataFrame:
@@ -56,109 +57,111 @@ def _one_level(
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Louvain phase 1 on a symmetric weighted graph: returns
-    labels[id, label] after greedy gain moves converge."""
-    deg = sym.groupBy(F.col("src").alias("id")).agg(F.sum("weight").alias("k"))
-    k_tab = (
-        vertices.select("id")
-        .join(deg, "id", "left")
-        .select("id", F.coalesce("k", F.lit(0.0)).alias("k"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    try:
-        labels = k_tab.select("id", F.col("id").alias("label"), "k").localCheckpoint(
-            eager=True
+    labels[id, label] after greedy gain moves converge.
+
+    State [id, label, k, r, _w] on the superstep driver: ``r`` is the
+    round number the parity hash reads (a column, so every round runs
+    the same plan) and ``_w`` marks the vertices that wanted to move; a
+    round in which none did changed no label and stops the level."""
+    pinned = []
+    # Self-loop rows appear after contraction (a community's internal
+    # weight, both orientations). They belong in k and Σtot — loop mass
+    # moves with the vertex — but NOT in k_{v,c}: the loop's dst label is
+    # the vertex's own community, so counting it would inflate the stay
+    # side only and freeze contracted vertices at levels >= 2.
+    sym_noloop = sym.where(F.col("src") != F.col("dst"))
+
+    def setup() -> DataFrame:
+        deg = sym.groupBy(F.col("src").alias("id")).agg(F.sum("weight").alias("k"))
+        k_tab = (
+            vertices.select("id")
+            .join(deg, "id", "left")
+            .select("id", F.coalesce("k", F.lit(0.0)).alias("k"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # Self-loop rows appear after contraction (a community's internal
-        # weight, both orientations). They belong in k and Σtot — loop mass
-        # moves with the vertex — but NOT in k_{v,c}: the loop's dst label is
-        # the vertex's own community, so counting it would inflate the stay
-        # side only and freeze contracted vertices at levels >= 2.
-        sym_noloop = sym.where(F.col("src") != F.col("dst"))
-        for rnd in range(max_rounds):
-            # community totals Σtot_c
-            tot = labels.groupBy("label").agg(F.sum("k").alias("tot"))
-            # k_{v,c}: weight from v to each neighboring community (loop-free)
-            nbr_lab = labels.select(F.col("id").alias("dst"), F.col("label").alias("c"))
-            kvc = (
-                sym_noloop.join(nbr_lab.hint("shuffle_hash"), "dst")
-                .groupBy(F.col("src").alias("id"), "c")
-                .agg(F.sum("weight").alias("kvc"))
+        pinned.append(k_tab)
+        return k_tab.select("id", F.col("id").alias("label"), "k", F.lit(0).alias("r"), F.lit(False).alias("_w"))
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        # community totals Σtot_c
+        tot = labels.groupBy("label").agg(F.sum("k").alias("tot"))
+        # k_{v,c}: weight from v to each neighboring community (loop-free)
+        nbr_lab = labels.select(F.col("id").alias("dst"), F.col("label").alias("c"))
+        kvc = (
+            sym_noloop.join(nbr_lab.hint("shuffle_hash"), "dst")
+            .groupBy(F.col("src").alias("id"), "c")
+            .agg(F.sum("weight").alias("kvc"))
+        )
+        cur = labels.select("id", F.col("label").alias("cur"), "k")
+        # gain(v→c) for c != cur: k_{v,c} − k_v·Σtot_c/(2m); the stay side
+        # is computed explicitly below (Σtot_cur already contains k_v, so
+        # it is subtracted there) — never coalesced to 0, which would
+        # overstate staying whenever v has no neighbor in its own
+        # community (true stay gain is then −k·(Σtot_cur−k)/2m < 0).
+        cand = (
+            kvc.join(cur.hint("shuffle_hash"), "id")
+            .join(tot.select(F.col("label").alias("c"), "tot"), "c")
+            .select(
+                "id",
+                "c",
+                "cur",
+                "k",
+                "kvc",
+                (F.col("kvc") - F.col("k") * F.col("tot") / F.lit(two_m)).alias("gain"),
             )
-            cur = labels.select("id", F.col("label").alias("cur"), "k")
-            # gain(v→c) for c != cur: k_{v,c} − k_v·Σtot_c/(2m); the stay side
-            # is computed explicitly below (Σtot_cur already contains k_v, so
-            # it is subtracted there) — never coalesced to 0, which would
-            # overstate staying whenever v has no neighbor in its own
-            # community (true stay gain is then −k·(Σtot_cur−k)/2m < 0).
-            cand = (
-                kvc.join(cur.hint("shuffle_hash"), "id")
-                .join(tot.select(F.col("label").alias("c"), "tot"), "c")
-                .select(
-                    "id",
-                    "c",
-                    "cur",
-                    "k",
-                    "kvc",
-                    (F.col("kvc") - F.col("k") * F.col("tot") / F.lit(two_m)).alias(
-                        "gain"
-                    ),
-                )
+        )
+        best = (
+            cand.where(F.col("c") != F.col("cur"))
+            .groupBy("id")
+            .agg(
+                F.max_by("c", F.struct(F.col("gain"), -F.col("c"))).alias("best_c"),
+                F.max("gain").alias("best_gain"),
+                F.first("cur").alias("cur"),
+                F.first("k").alias("k"),
             )
-            best = (
-                cand.where(F.col("c") != F.col("cur"))
-                .groupBy("id")
-                .agg(
-                    F.max_by("c", F.struct(F.col("gain"), -F.col("c"))).alias("best_c"),
-                    F.max("gain").alias("best_gain"),
-                    F.first("cur").alias("cur"),
-                    F.first("k").alias("k"),
-                )
+        )
+        kvc_cur = cand.where(F.col("c") == F.col("cur")).select("id", F.col("kvc").alias("kvc_cur"))
+        tot_cur = tot.select(F.col("label").alias("cur"), F.col("tot").alias("tot_cur"))
+        scored = (
+            best.join(kvc_cur.hint("shuffle_hash"), "id", "left")
+            .join(tot_cur, "cur")
+            .select(
+                "id",
+                "best_c",
+                "best_gain",
+                "cur",
+                (
+                    F.coalesce(F.col("kvc_cur"), F.lit(0.0))
+                    - F.col("k") * (F.col("tot_cur") - F.col("k")) / F.lit(two_m)
+                ).alias("stay_gain"),
             )
-            kvc_cur = cand.where(F.col("c") == F.col("cur")).select(
-                "id", F.col("kvc").alias("kvc_cur")
-            )
-            tot_cur = tot.select(F.col("label").alias("cur"), F.col("tot").alias("tot_cur"))
-            scored = (
-                best.join(kvc_cur.hint("shuffle_hash"), "id", "left")
-                .join(tot_cur, "cur")
-                .select(
-                    "id",
-                    "best_c",
-                    "best_gain",
-                    "cur",
-                    (
-                        F.coalesce(F.col("kvc_cur"), F.lit(0.0))
-                        - F.col("k") * (F.col("tot_cur") - F.col("k")) / F.lit(two_m)
-                    ).alias("stay_gain"),
-                )
-            )
-            # move only on strict improvement, half-synchronously (hash parity);
-            # convergence is judged on the PRE-parity wanted set — a round
-            # where every beneficial move happens to be parity-blocked is not
-            # converged (the parity flips next round)
-            wanted = scored.where(
-                F.col("best_gain") > F.col("stay_gain") + 1e-12
-            ).select("id", F.col("best_c").alias("new_label"))
-            wanted = wanted.localCheckpoint(eager=True)
-            n_wanted = wanted.limit(1).count()
-            if n_wanted == 0:
-                break
-            # half-synchronous move parity; hash_fn="portable" makes the
-            # DuckDB oracle able to replay the parity decision exactly
-            if hash_fn == "portable":
-                movable = F.pmod(portable_hash64(F.col("id"), rnd), F.lit(2)) == 0
-            else:
-                movable = F.pmod(F.xxhash64("id", F.lit(rnd)), F.lit(2)) == 0
-            moves = wanted.where(movable)
-            labels = (
-                labels.join(moves, "id", "left")
-                .select(
-                    "id", F.coalesce("new_label", "label").alias("label"), "k"
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        k_tab.unpersist()
+        )
+        # move only on strict improvement, half-synchronously (hash parity);
+        # convergence is judged on the PRE-parity wanted set — a round
+        # where every beneficial move happens to be parity-blocked is not
+        # converged (the parity flips next round)
+        wanted = scored.where(F.col("best_gain") > F.col("stay_gain") + 1e-12).select(
+            "id", F.col("best_c").alias("new_label")
+        )
+        # half-synchronous move parity; hash_fn="portable" makes the
+        # DuckDB oracle able to replay the parity decision exactly
+        if hash_fn == "portable":
+            movable = F.pmod(portable_hash64(F.col("id"), F.col("r")), F.lit(2)) == 0
+        else:
+            movable = F.pmod(F.xxhash64("id", "r"), F.lit(2)) == 0
+        return labels.join(wanted, "id", "left").select(
+            "id",
+            F.when(F.col("new_label").isNotNull() & movable, F.col("new_label")).otherwise(F.col("label")).alias("label"),
+            "k",
+            (F.col("r") + 1).alias("r"),
+            F.col("new_label").isNotNull().alias("_w"),
+        )
+
+    def moved(new: DataFrame, old: DataFrame) -> tuple[bool, dict]:
+        n = new.where("_w").count()
+        return n == 0, {"wanted": n}
+
+    labels = run_supersteps(setup, step, limit=max_rounds, changed=moved, pinned=pinned)
     return labels.select("id", "label")
 
 

@@ -24,6 +24,8 @@ from pyspark.sql import Window
 from pyspark.storagelevel import StorageLevel
 
 from lynxkite_spark.graph import Graph
+from lynxkite_spark.operators.betweenness import _forward_bfs
+from lynxkite_spark.plans.iterate import run_supersteps
 
 
 def random_walk_sample(
@@ -42,91 +44,71 @@ def random_walk_sample(
     where ``first_visited`` is the earliest step the vertex was visited
     (the reference's `vertexFirstVisited` semantics); unvisited vertices
     are absent.
+
+    Walker state [walker, start, pos, path] on the superstep driver; the
+    step number is ``size(path)``, so every round runs the same plan,
+    and ``first_visited`` is a vertex's smallest index in any path.
     """
     assert 0.0 <= restart_probability < 1.0
-    e = graph.edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        starts = (
+    pinned = []
+
+    def setup() -> DataFrame:
+        pinned.append(graph.edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK))
+        return (
             graph.vertices.select("id")
             .orderBy(F.xxhash64(F.lit(seed), "id"))
             .limit(num_walkers)
             .select(
                 F.row_number().over(Window.orderBy("id")).alias("walker"),
                 F.col("id").alias("start"),
+                F.col("id").alias("pos"),
+                F.array("id").alias("path"),
             )
         )
-        # walkers[walker, start, pos]
-        walkers = starts.select("walker", "start", F.col("start").alias("pos"))
-        walkers = walkers.localCheckpoint(eager=True)
-        visited = walkers.select(F.col("pos").alias("id"), F.lit(0).alias("first_visited"))
-        visited = visited.localCheckpoint(eager=True)
-        for step in range(1, max_steps + 1):
-            moved = (
-                walkers.join(e, walkers.pos == e.src, "left")
-                .groupBy("walker", "start", "pos")
-                .agg(
-                    F.max_by(
-                        "dst", F.xxhash64(F.lit(seed), F.lit(step), F.col("walker"), F.col("dst"))
-                    ).alias("nxt")
-                )
+
+    def step(walkers: DataFrame, _: int) -> DataFrame:
+        e = pinned[0]
+        s = F.size("path")  # the step number: the path holds the start and one vertex per step
+        moved = (
+            walkers.join(e, walkers.pos == e.src, "left")
+            .groupBy("walker", "start", "pos")
+            .agg(
+                F.max_by("dst", F.xxhash64(F.lit(seed), s, F.col("walker"), F.col("dst"))).alias("nxt"),
+                F.first("path").alias("path"),
             )
-            restart = (
-                F.pmod(F.xxhash64(F.lit(seed), F.lit(step), F.col("walker")), F.lit(10_000))
-                < F.lit(int(restart_probability * 10_000))
-            )
-            walkers = moved.select(
-                "walker",
-                "start",
-                F.when(restart | F.col("nxt").isNull(), F.col("start"))
-                .otherwise(F.col("nxt"))
-                .alias("pos"),
-            ).localCheckpoint(eager=True)
-            visited = (
-                visited.unionByName(
-                    walkers.select(F.col("pos").alias("id"), F.lit(step).alias("first_visited"))
-                )
-                .groupBy("id")
-                .agg(F.min("first_visited").alias("first_visited"))
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        e.unpersist()
-    return visited
+        )
+        restart = F.pmod(F.xxhash64(F.lit(seed), s, F.col("walker")), F.lit(10_000)) < F.lit(
+            int(restart_probability * 10_000)
+        )
+        pos = F.when(restart | F.col("nxt").isNull(), F.col("start")).otherwise(F.col("nxt"))
+        return moved.select("walker", "start", pos.alias("pos"), F.concat("path", F.array(pos)).alias("path"))
+
+    walkers = run_supersteps(setup, step, limit=max_steps, pinned=pinned)
+    return (
+        walkers.select(F.posexplode("path").alias("first_visited", "id"))
+        .groupBy("id")
+        .agg(F.min("first_visited").alias("first_visited"))
+    )
 
 
 def vertex_neighborhood(
     graph, center_ids: list, radius: int = 1, max_count: int | None = None
 ):
     """ComputeVertexNeighborhood.scala — the vertices within ``radius``
-    hops of the given centers (ego net), as DataFrame[id, distance].
-    One frontier join per hop, visited via left-anti join (the same
-    shape as the k-source BFS in betweenness.py); ``max_count`` caps
-    the result like the reference's sampled view budget (nearest hops
-    kept first, ties broken by id)."""
-    from pyspark.sql import Window as W
-
+    hops of the given centers (ego net), as DataFrame[id, distance]:
+    betweenness' multi-root BFS with every center a source of one root;
+    ``max_count`` caps the result like the reference's sampled view
+    budget (nearest hops kept first, ties broken by id)."""
     spark = graph.vertices.sparkSession
     e = graph.edges.select("src", "dst")
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    seen = spark.createDataFrame(
-        [(int(i), 0) for i in center_ids], "id long, distance int"
-    )
-    frontier = seen.select("id")
-    for hop in range(1, radius + 1):
-        nxt = (
-            frontier.join(sym, frontier.id == sym.src)
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(seen.select("id"), "id", "left_anti")
-        )
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt.select("id", F.lit(hop).alias("distance")))
-        frontier = nxt
+    sources = spark.createDataFrame([(0, int(i)) for i in center_ids], "root long, id long")
+    state, _ = _forward_bfs(sym, sources, radius)
+    seen = state.select("id", F.col("d").alias("distance"))
     if max_count is not None:
-        w = W.orderBy("distance", "id")
+        w = Window.orderBy("distance", "id")
         seen = (
             seen.withColumn("_r", F.row_number().over(w))
             .where(F.col("_r") <= max_count)

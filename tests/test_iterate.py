@@ -10,11 +10,12 @@ from lynxkite_spark.graph import Graph
 from lynxkite_spark.operators.betweenness import betweenness_centrality, closeness_centrality
 from lynxkite_spark.operators.centrality import eigenvector_centrality, harmonic_centrality, katz_centrality
 from lynxkite_spark.operators.coloring import greedy_coloring
+from lynxkite_spark.operators.embeddings import random_walks
 from lynxkite_spark.operators.fingerprinting import fingerprinting
 from lynxkite_spark.operators.hyperball import hyperball
 from lynxkite_spark.operators.kpath import kpath_centrality
 from lynxkite_spark.operators.modular import modular_clustering
-from lynxkite_spark.operators.sampling import random_walk_sample
+from lynxkite_spark.operators.sampling import random_walk_sample, vertex_neighborhood
 from lynxkite_spark.operators.shortest_path import shortest_path
 from lynxkite_spark.plans.checkpoint import CheckpointManager
 from lynxkite_spark.plans.iterate import run_supersteps
@@ -172,6 +173,11 @@ _CALLS = {
     "closeness": lambda g, s: closeness_centrality(g, k=4, max_depth=4),
     "hyperball": lambda g, s: hyperball(g, max_distance=3, log2m=4),
     "modular_edgeless": lambda g, s: modular_clustering(Graph(vertices=g.vertices, edges=g.edges.limit(0))),
+    "modular": lambda g, s: modular_clustering(g, max_rounds=4),
+    "kpath": lambda g, s: kpath_centrality(g, k=3),
+    "random_walk": lambda g, s: random_walk_sample(g, max_steps=3),
+    "random_walks": lambda g, s: random_walks(g, walk_length=4),
+    "vertex_neighborhood": lambda g, s: vertex_neighborhood(g, [0, 5], radius=2, max_count=4),
 }
 
 
@@ -220,11 +226,30 @@ def test_operator_releases_its_caches_when_a_round_raises(spark, monkeypatch, na
     assert _cache_empty(spark)
 
 
+def _compiled(spark, sized):
+    """Classes compiled by each repeated and each longer call of
+    ``sized = {name: (call of a round count, a count, a larger count or
+    None)}``, measured after one call of the smaller count."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    for call, short, _ in sized.values():
+        call(short).collect()
+    added = {}
+    for name, (call, short, long) in sized.items():
+        for label, n in (("repeat", short), ("longer", long)):
+            if n is not None:
+                before = compiles.getCount()
+                call(n).collect()
+                added[name, label] = compiles.getCount() - before
+    return added
+
+
 def test_repeated_calls_reuse_their_generated_code(spark):
     """A second call of an operator compiles no class: its plans hit
     Spark's codegen cache, which the session sizes above the working
     set, and its change checks carry no ``limit`` (whose generated code
-    names a fresh counter field on every call)."""
+    names a fresh counter field on every call). A longer call after a
+    shorter one compiles none either: a round reads its number from the
+    state, never from a literal, so every round runs the same plan."""
     from lynxkite_spark.operators.components import connected_components
     from lynxkite_spark.operators.kcore import core_decomposition
     from lynxkite_spark.operators.labelprop import label_propagation
@@ -232,22 +257,47 @@ def test_repeated_calls_reuse_their_generated_code(spark):
     from tests.test_hyperball import _er_graph
 
     g = _er_graph(spark, n=200)
-    calls = {
-        "star": lambda: connected_components(g, algorithm="star"),
-        "minlabel": lambda: connected_components(g, algorithm="minlabel"),
-        "lpa": lambda: label_propagation(g, max_iterations=5),
-        "kcore": lambda: core_decomposition(g),
-        "triangles": lambda: triangle_count(g),
-    }
-    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
-    for call in calls.values():
-        call().collect()
-    added = {}
-    for name, call in calls.items():
-        before = compiles.getCount()
-        call().collect()
-        added[name] = compiles.getCount() - before
-    assert added == {name: 0 for name in calls}
+    added = _compiled(
+        spark,
+        {
+            "star": (lambda n: connected_components(g, algorithm="star"), 0, None),
+            "minlabel": (lambda n: connected_components(g, algorithm="minlabel"), 0, None),
+            "lpa": (lambda n: label_propagation(g, max_iterations=n), 5, None),
+            "kcore": (lambda n: core_decomposition(g), 0, None),
+            "triangles": (lambda n: triangle_count(g), 0, None),
+            "kpath": (lambda n: kpath_centrality(g, k=n), 3, 6),
+            "random_walk": (lambda n: random_walk_sample(g, max_steps=n), 3, 6),
+            "random_walks": (lambda n: random_walks(g, walk_length=n), 4, 7),
+            "betweenness": (lambda n: betweenness_centrality(g, k=4, max_depth=n), 2, 4),
+            "hyperball": (lambda n: hyperball(g, max_distance=n, log2m=4), 2, 4),
+        },
+    )
+    assert added == {key: 0 for key in added}
+
+    # A round of Louvain or coloring is many independent exchanges, and
+    # adaptive execution numbers a query's codegen stages in the order
+    # their inputs finish; the number is part of the generated class
+    # name, so a round of the same source may still compile under a new
+    # name. These two are checked with the number left out of the name.
+    key = "spark.sql.codegen.useIdInClassName"
+    spark.conf.set(key, "false")
+    try:
+        added = _compiled(
+            spark,
+            {
+                "modular": (lambda n: modular_clustering(g, max_rounds=n, levels=1), 2, 4),
+                "modular_portable": (
+                    lambda n: modular_clustering(g, max_rounds=n, levels=1, hash_fn="portable"),
+                    2,
+                    4,
+                ),
+                # rounds 1, 2 and 3+ of coloring are different plans: a repeat only
+                "coloring": (lambda n: greedy_coloring(_ring(spark), max_iterations=n), 50, None),
+            },
+        )
+    finally:
+        spark.conf.unset(key)
+    assert added == {key: 0 for key in added}
 
 
 def _jobs(spark, fn):
