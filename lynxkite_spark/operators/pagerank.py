@@ -141,8 +141,9 @@ def pagerank(
         if edges_pinned is not None:
             edges_pinned.unpersist()
 
-        # localCheckpoint output (LogicalRDD) carries no size stats, so
-        # Catalyst can't see that the rank table is broadcastable — hint
+        # localCheckpoint output (LogicalRDD) carries the size estimate
+        # inherited from the plan it cut, not the rank table's real size,
+        # so Catalyst can't see that the table is broadcastable — hint
         # it explicitly while |V| is small. Building a broadcast relation
         # is a SERIAL driver-side step repeated every iteration; measured
         # on this box it stops paying for itself around a few hundred

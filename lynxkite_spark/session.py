@@ -10,8 +10,15 @@ hand-counting partitions.
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import subprocess
+from pathlib import Path
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # Reference partition-sizing anchors (BASELINE.md):
@@ -29,6 +36,79 @@ def default_heap() -> str:
     return f"{max(1, int(kib * 0.6) >> 20)}g"
 
 
+def _cds_key(spark_home: Path, java_home: Path) -> str:
+    """Names a class-data archive after what it holds, from stats only:
+    the JDK build and every jar on the driver's classpath."""
+    h = hashlib.sha256()
+    for f in [java_home / "lib" / "server" / "libjvm.so", *sorted((spark_home / "jars").iterdir())]:
+        st = f.stat()
+        h.update(f"{f}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:24]
+
+
+def _cds_plan() -> tuple[str, Path | None, Path] | None:
+    """``(java options, dump file or None, archive)`` for the driver
+    JVM's dynamic class-data archive, or None when no JVM is launched
+    or its classpath is not one an archive can be dumped against.
+
+    The archive lives under ``$XDG_CACHE_HOME/lynxkite_spark/cds``. If
+    it exists the JVM maps it (a mismatched or corrupt one is rejected
+    silently); otherwise the JVM dumps the classes it loaded, at exit,
+    to a per-process file that ``_finish_dump`` keeps or deletes. The
+    dump refuses a classpath holding a non-empty directory, and Spark
+    puts its conf directory there, so the JVM is launched with the empty
+    ``conf`` next to the archive; that changes nothing only while the
+    real one holds templates.
+    """
+    # a gateway port means spark-submit launched the JVM already
+    other = ("PYSPARK_GATEWAY_PORT", "SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+    if any(os.environ.get(v) for v in other):
+        return None
+    spark_home = Path(_find_spark_home())
+    java = os.environ.get("JAVA_HOME") or shutil.which("java")
+    if not java:
+        return None
+    java_home = Path(java) if os.environ.get("JAVA_HOME") else Path(os.path.realpath(java)).parent.parent
+    conf = spark_home / "conf"
+    if conf.is_dir() and any(not f.name.endswith(".template") for f in conf.iterdir()):
+        return None
+    cache = Path(os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache") / "lynxkite_spark" / "cds"
+    try:
+        (cache / "conf").mkdir(parents=True, exist_ok=True)
+        key = _cds_key(spark_home, java_home)
+    except OSError:
+        return None
+    if not os.access(cache, os.W_OK):
+        return None
+    quiet = "-Xlog:cds=off -Xlog:cds+dynamic=off"
+    jsa = cache / f"{key}.jsa"
+    if jsa.exists():
+        return f"-XX:SharedArchiveFile={jsa} {quiet}", None, jsa
+    for stale in cache.glob("*.tmp"):  # left by a process that was killed
+        if not Path("/proc", stale.name.split(".")[1]).exists():
+            stale.unlink(missing_ok=True)
+    tmp = cache / f"{key}.{os.getpid()}.tmp"
+    return f"-XX:ArchiveClassesAtExit={tmp} {quiet}", tmp, jsa
+
+
+def _finish_dump(proc, tmp: Path, jsa: Path) -> None:
+    """End the dumping JVM (it exits when its stdin closes) and keep its
+    archive only if it exited with 0; a failed dump exits with 1."""
+    if SparkContext._active_spark_context is not None:
+        # stopped first, the accumulator server does not see the JVM go
+        SparkContext._active_spark_context.stop()
+    proc.stdin.close()
+    try:
+        proc.wait(timeout=120)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.wait()
+    if proc.returncode == 0 and tmp.exists():
+        os.replace(tmp, jsa)
+    else:
+        tmp.unlink(missing_ok=True)
+
+
 def get_spark(
     cores: int | str | None = None,
     shuffle_partitions: int | None = None,
@@ -39,7 +119,11 @@ def get_spark(
 
     ``cores`` is an int for ``local[N]`` or a full master URL; defaults to
     ``$SPARK_GRAFT_CPUS`` (falling back to ``local[*]``). The driver heap
-    is ``$SPARK_DRIVER_MEMORY``, else ``default_heap()``.
+    is ``$SPARK_DRIVER_MEMORY``, else ``default_heap()``. A session
+    that launches the driver JVM maps the class-data archive kept in
+    ``$XDG_CACHE_HOME/lynxkite_spark/cds`` (or dumps it at exit, a few
+    seconds, when that JDK and jar set has none) through
+    ``spark.driver.defaultJavaOptions``, which is the engine's to set.
     """
     heap = os.environ.get("SPARK_DRIVER_MEMORY") or default_heap()
     env_cores = os.environ.get("SPARK_GRAFT_CPUS")
@@ -107,9 +191,34 @@ def get_spark(
         # entries evicts each (LRU) before its next use, so every round
         # and call would compile its plan again.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # Adaptive execution numbers a query's codegen stages in the
+        # order their inputs finish, and by default the number is part
+        # of the generated class name, so a repeated round of several
+        # independent exchanges (Louvain, coloring) compiles the same
+        # source again under a new name. Without the id, repo_graph's
+        # warm-up compiled 115 classes instead of 143.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
+    cds = None
+    if SparkContext._gateway is None and "spark.driver.defaultJavaOptions" not in (extra_conf or {}):
+        cds = _cds_plan()
+    if cds:
+        # Spark puts these in front of extraJavaOptions, which callers replace
+        builder = builder.config("spark.driver.defaultJavaOptions", cds[0])
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    try:
+        if cds:
+            os.environ["SPARK_CONF_DIR"] = str(cds[2].with_name("conf"))
+        spark = builder.getOrCreate()
+    except BaseException:
+        if cds and cds[1]:
+            cds[1].unlink(missing_ok=True)
+        raise
+    finally:
+        if cds:  # a plan exists only while SPARK_CONF_DIR is unset
+            os.environ.pop("SPARK_CONF_DIR", None)
+    if cds and cds[1]:
+        atexit.register(_finish_dump, spark.sparkContext._gateway.proc, cds[1], cds[2])
     spark.sparkContext.setLogLevel("WARN")
     return spark

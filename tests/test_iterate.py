@@ -246,8 +246,11 @@ def _compiled(spark, sized):
 def test_repeated_calls_reuse_their_generated_code(spark):
     """A second call of an operator compiles no class: its plans hit
     Spark's codegen cache, which the session sizes above the working
-    set, and its change checks carry no ``limit`` (whose generated code
-    names a fresh counter field on every call). A longer call after a
+    set and keys without the codegen stage id (adaptive execution
+    numbers the stages of a round of many exchanges, as in Louvain and
+    coloring, in the order their inputs finish), and its change checks
+    carry no ``limit`` (whose generated code names a fresh counter
+    field on every call). A longer call after a
     shorter one compiles none either: a round reads its number from the
     state, never from a literal, so every round runs the same plan."""
     from lynxkite_spark.operators.components import connected_components
@@ -270,33 +273,12 @@ def test_repeated_calls_reuse_their_generated_code(spark):
             "random_walks": (lambda n: random_walks(g, walk_length=n), 4, 7),
             "betweenness": (lambda n: betweenness_centrality(g, k=4, max_depth=n), 2, 4),
             "hyperball": (lambda n: hyperball(g, max_distance=n, log2m=4), 2, 4),
+            "modular": (lambda n: modular_clustering(g, max_rounds=n, levels=1), 2, 4),
+            "modular_portable": (lambda n: modular_clustering(g, max_rounds=n, levels=1, hash_fn="portable"), 2, 4),
+            # rounds 1, 2 and 3+ of coloring are different plans: a repeat only
+            "coloring": (lambda n: greedy_coloring(_ring(spark), max_iterations=n), 50, None),
         },
     )
-    assert added == {key: 0 for key in added}
-
-    # A round of Louvain or coloring is many independent exchanges, and
-    # adaptive execution numbers a query's codegen stages in the order
-    # their inputs finish; the number is part of the generated class
-    # name, so a round of the same source may still compile under a new
-    # name. These two are checked with the number left out of the name.
-    key = "spark.sql.codegen.useIdInClassName"
-    spark.conf.set(key, "false")
-    try:
-        added = _compiled(
-            spark,
-            {
-                "modular": (lambda n: modular_clustering(g, max_rounds=n, levels=1), 2, 4),
-                "modular_portable": (
-                    lambda n: modular_clustering(g, max_rounds=n, levels=1, hash_fn="portable"),
-                    2,
-                    4,
-                ),
-                # rounds 1, 2 and 3+ of coloring are different plans: a repeat only
-                "coloring": (lambda n: greedy_coloring(_ring(spark), max_iterations=n), 50, None),
-            },
-        )
-    finally:
-        spark.conf.unset(key)
     assert added == {key: 0 for key in added}
 
 

@@ -1,0 +1,168 @@
+"""The driver JVM's class-data archive (session.py): its key, the guards
+that keep the flags off, the dump's keep-or-delete step, and one
+end-to-end run of a dumping, a mapping and a corrupt-archive session."""
+
+import json
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+from pyspark import SparkContext
+from pyspark.sql import SparkSession
+
+from lynxkite_spark.session import _cds_key, _cds_plan, _finish_dump, get_spark
+
+ROOT = Path(__file__).resolve().parent.parent
+
+
+@pytest.fixture
+def fake_spark(tmp_path, monkeypatch):
+    """A Spark home with one jar and a templates-only conf directory, a
+    JDK home with a libjvm, and a cache under ``tmp_path``."""
+    home, jdk = tmp_path / "spark", tmp_path / "jdk"
+    (home / "jars").mkdir(parents=True)
+    (home / "jars" / "a.jar").write_bytes(b"jar")
+    (home / "conf").mkdir()
+    (home / "conf" / "spark-defaults.conf.template").write_text("")
+    (jdk / "lib" / "server").mkdir(parents=True)
+    (jdk / "lib" / "server" / "libjvm.so").write_bytes(b"jvm")
+    monkeypatch.setenv("SPARK_HOME", str(home))
+    monkeypatch.setenv("JAVA_HOME", str(jdk))
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    for var in ("PYSPARK_GATEWAY_PORT", "SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH"):
+        monkeypatch.delenv(var, raising=False)
+    return home, jdk, tmp_path / "cache" / "lynxkite_spark" / "cds"
+
+
+def test_key_follows_the_jar_set(fake_spark):
+    home, jdk, _ = fake_spark
+    jar = home / "jars" / "a.jar"
+    keys = [_cds_key(home, jdk)]
+    os.utime(jar, ns=(1, 10**18))
+    keys.append(_cds_key(home, jdk))
+    jar.write_bytes(b"a larger jar")
+    os.utime(jar, ns=(1, 10**18))
+    keys.append(_cds_key(home, jdk))
+    assert len(set(keys)) == 3
+    assert _cds_key(home, jdk) == keys[-1]
+
+
+def test_plan_dumps_once_then_maps(fake_spark):
+    _, _, cache = fake_spark
+    options, tmp, jsa = _cds_plan()
+    assert f"-XX:ArchiveClassesAtExit={tmp}" in options
+    assert tmp.name == f"{jsa.stem}.{os.getpid()}.tmp" and jsa.parent == cache
+    assert (cache / "conf").is_dir() and not any((cache / "conf").iterdir())
+    jsa.write_bytes(b"archive")
+    options, tmp, _ = _cds_plan()
+    assert tmp is None and f"-XX:SharedArchiveFile={jsa}" in options
+
+
+def test_no_flags_when_the_jvm_or_its_classpath_is_not_ours(fake_spark, monkeypatch, tmp_path):
+    home, _, _ = fake_spark
+    assert _cds_plan() is not None
+    for var in ("PYSPARK_GATEWAY_PORT", "SPARK_CONF_DIR", "HADOOP_CONF_DIR"):
+        monkeypatch.setenv(var, str(tmp_path))
+        assert _cds_plan() is None, var
+        monkeypatch.delenv(var)
+    (home / "conf" / "spark-defaults.conf").write_text("spark.sql.shuffle.partitions 3\n")
+    assert _cds_plan() is None
+
+
+def test_no_flags_when_the_cache_is_not_writable(fake_spark, monkeypatch, tmp_path):
+    (tmp_path / "file").write_text("")
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "file" / "cache"))
+    assert _cds_plan() is None
+
+
+def _jvm(status):
+    """A stand-in for the gateway JVM: exits with ``status`` once its
+    stdin closes."""
+    return subprocess.Popen(
+        [sys.executable, "-c", f"import sys; sys.stdin.read(); sys.exit({status})"], stdin=subprocess.PIPE
+    )
+
+
+@pytest.mark.parametrize("status", [0, 1])
+def test_dump_is_kept_only_when_the_jvm_exits_with_0(tmp_path, monkeypatch, status):
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)  # leave the suite's session running
+    tmp, jsa = tmp_path / "k.1.tmp", tmp_path / "k.jsa"
+    tmp.write_bytes(b"archive")
+    _finish_dump(_jvm(status), tmp, jsa)
+    assert not tmp.exists()
+    assert jsa.exists() == (status == 0)
+
+
+def test_conf_dir_is_restored_when_the_launch_raises(fake_spark, monkeypatch):
+    _, _, cache = fake_spark
+    seen = {}
+
+    def fail(builder):
+        seen["conf_dir"] = os.environ.get("SPARK_CONF_DIR")
+        seen["options"] = builder._options.get("spark.driver.defaultJavaOptions")
+        # the JVM dumps to the file the option names; leave a partial one
+        Path(seen["options"].split("ArchiveClassesAtExit=")[1].split()[0]).write_bytes(b"partial")
+        raise RuntimeError("launch failed")
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", fail)
+    with pytest.raises(RuntimeError, match="launch failed"):
+        get_spark(cores=1)
+    assert seen["conf_dir"] == str(cache / "conf")
+    assert "-XX:ArchiveClassesAtExit=" in seen["options"]
+    assert "SPARK_CONF_DIR" not in os.environ
+    assert not list(cache.glob("*.tmp"))
+
+
+_SESSION = """
+import json
+from lynxkite_spark.session import get_spark
+spark = get_spark(cores=1)
+with open(f"/proc/{spark.sparkContext._gateway.proc.pid}/maps") as f:
+    mapped = sorted({line.split()[-1] for line in f if line.rstrip().endswith(".jsa")})
+rows = spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count().orderBy("k").collect()
+print(json.dumps({"rows": [list(r) for r in rows], "mapped": mapped}))
+"""
+
+
+def _session(cache):
+    env = {k: v for k, v in os.environ.items() if k not in ("PYSPARK_GATEWAY_PORT", "SPARK_CONF_DIR")}
+    env.update(XDG_CACHE_HOME=str(cache), SPARK_DRIVER_MEMORY="1g", PYTHONPATH=str(ROOT))
+    out = subprocess.run(
+        [sys.executable, "-c", _SESSION],
+        env=env,
+        cwd=ROOT,
+        stdout=subprocess.PIPE,
+        stderr=subprocess.DEVNULL,
+        text=True,
+        timeout=300,
+        check=True,
+    )
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def test_first_session_dumps_the_archive_and_the_next_maps_it(tmp_path, monkeypatch):
+    """Two fresh processes on an empty cache: the first leaves the
+    archive behind at exit, the second's driver JVM maps it. A third,
+    over an archive overwritten with random bytes, starts without it.
+    All three give the same rows."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    for var in ("PYSPARK_GATEWAY_PORT", "SPARK_CONF_DIR"):
+        monkeypatch.delenv(var, raising=False)
+    if _cds_plan() is None:
+        pytest.skip("this Spark installation's classpath cannot be archived")
+    cds = tmp_path / "lynxkite_spark" / "cds"
+    first = _session(tmp_path)
+    (jsa,) = (p.resolve() for p in cds.glob("*.jsa"))
+    assert not list(cds.glob("*.tmp"))
+    assert str(jsa) not in first["mapped"]
+    second = _session(tmp_path)
+    assert str(jsa) in second["mapped"]
+    junk = tmp_path / "junk"
+    junk.write_bytes(os.urandom(jsa.stat().st_size))
+    os.replace(junk, jsa)
+    third = _session(tmp_path)
+    assert str(jsa) not in third["mapped"]
+    assert first["rows"] == second["rows"] == third["rows"] == [[k, 143 if k < 6 else 142] for k in range(7)]
