@@ -74,9 +74,10 @@ def derive_repo_edges(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
             "repo",
             F.explode(extract_imports(F.col("content"), F.col("lang"))).alias("module"),
         )
-        .select("repo", F.regexp_extract("module", r"^org_repo_(\d{5})", 1).alias("digits"))
-        .where(F.col("digits") != "")
-        .select("repo", F.concat(F.lit("org/repo-"), "digits").alias("dst_repo"))
+        # a match and a fixed-width cut: Catalyst inlines a projected
+        # regexp_extract into every later filter that reads it
+        .where(F.col("module").rlike(r"^org_repo_\d{5}"))
+        .select("repo", F.concat(F.lit("org/repo-"), F.substring("module", 10, 5)).alias("dst_repo"))
         .where(F.col("dst_repo") != F.col("repo"))
     )
     # resolve dst against the dictionary (drop dangling refs); broadcast —

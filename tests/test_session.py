@@ -1,6 +1,7 @@
-"""The driver JVM's class-data archive (session.py): its key, the guards
-that keep the flags off, the dump's keep-or-delete step, and one
-end-to-end run of a dumping, a mapping and a corrupt-archive session."""
+"""The driver JVM's options (session.py): the class-data archive's key,
+the guards that keep its flags off, the dump's keep-or-delete step, the
+tier-4 JIT thresholds, and one end-to-end run of a dumping, a mapping
+and a corrupt-archive session."""
 
 import json
 import os
@@ -12,7 +13,7 @@ import pytest
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-from lynxkite_spark.session import _cds_key, _cds_plan, _finish_dump, get_spark
+from lynxkite_spark.session import TIER4_THRESHOLDS, _cds_key, _cds_plan, _finish_dump, get_spark
 
 ROOT = Path(__file__).resolve().parent.parent
 
@@ -116,14 +117,47 @@ def test_conf_dir_is_restored_when_the_launch_raises(fake_spark, monkeypatch):
     assert not list(cache.glob("*.tmp"))
 
 
+def _launch_options(monkeypatch, **kwargs):
+    """``(spark.driver.defaultJavaOptions, SPARK_CONF_DIR)`` that
+    ``get_spark`` would launch the driver JVM with, read at
+    ``getOrCreate``, which then raises so no JVM starts."""
+    seen = {}
+
+    def fail(builder):
+        seen.update(builder._options, conf_dir=os.environ.get("SPARK_CONF_DIR"))
+        raise RuntimeError("launch failed")
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", fail)
+    with pytest.raises(RuntimeError, match="launch failed"):
+        get_spark(cores=1, **kwargs)
+    return seen.get("spark.driver.defaultJavaOptions"), seen["conf_dir"]
+
+
+def test_driver_jvm_gets_the_tier4_thresholds_with_or_without_an_archive(fake_spark, monkeypatch, tmp_path):
+    options, _ = _launch_options(monkeypatch)
+    assert options.startswith(f"{TIER4_THRESHOLDS} -XX:ArchiveClassesAtExit=")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    assert _launch_options(monkeypatch) == (TIER4_THRESHOLDS, str(tmp_path))
+
+
+def test_callers_default_java_options_pass_through_unchanged(fake_spark, monkeypatch):
+    mine = "-XX:TieredStopAtLevel=1 -Dprobe=1"
+    # no archive either: the launch keeps the caller's conf directory
+    assert _launch_options(monkeypatch, extra_conf={"spark.driver.defaultJavaOptions": mine}) == (mine, None)
+
+
 _SESSION = """
 import json
 from lynxkite_spark.session import get_spark
 spark = get_spark(cores=1)
-with open(f"/proc/{spark.sparkContext._gateway.proc.pid}/maps") as f:
+pid = spark.sparkContext._gateway.proc.pid
+with open(f"/proc/{pid}/maps") as f:
     mapped = sorted({line.split()[-1] for line in f if line.rstrip().endswith(".jsa")})
+with open(f"/proc/{pid}/cmdline") as f:
+    tier4 = any(arg.startswith("-XX:Tier4InvocationThreshold=") for arg in f.read().split("\\0"))
 rows = spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count().orderBy("k").collect()
-print(json.dumps({"rows": [list(r) for r in rows], "mapped": mapped}))
+print(json.dumps({"rows": [list(r) for r in rows], "mapped": mapped, "tier4": tier4}))
 """
 
 
@@ -147,7 +181,8 @@ def test_first_session_dumps_the_archive_and_the_next_maps_it(tmp_path, monkeypa
     """Two fresh processes on an empty cache: the first leaves the
     archive behind at exit, the second's driver JVM maps it. A third,
     over an archive overwritten with random bytes, starts without it.
-    All three give the same rows."""
+    Every JVM runs with the tier-4 thresholds, and all three give the
+    same rows."""
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
     for var in ("PYSPARK_GATEWAY_PORT", "SPARK_CONF_DIR"):
         monkeypatch.delenv(var, raising=False)
@@ -165,4 +200,5 @@ def test_first_session_dumps_the_archive_and_the_next_maps_it(tmp_path, monkeypa
     os.replace(junk, jsa)
     third = _session(tmp_path)
     assert str(jsa) not in third["mapped"]
+    assert first["tier4"] and second["tier4"] and third["tier4"]
     assert first["rows"] == second["rows"] == third["rows"] == [[k, 143 if k < 6 else 142] for k in range(7)]
