@@ -13,6 +13,7 @@ from __future__ import annotations
 import atexit
 import hashlib
 import os
+import re
 import shutil
 import subprocess
 from pathlib import Path
@@ -40,6 +41,19 @@ TIER4_THRESHOLDS = (
     "-XX:Tier4InvocationThreshold=25000 -XX:Tier4MinInvocationThreshold=3000"
     " -XX:Tier4CompileThreshold=75000 -XX:Tier4BackEdgeThreshold=200000"
 )
+
+# The driver JVM's collector. In local mode the driver heap holds the
+# cached tables and round states. G1 takes each new region from anywhere
+# in the fixed heap, so within a one-minute session it writes, and keeps
+# resident, nearly all of it; Parallel reuses one young generation in
+# place. At the end of a perfbench repo_graph run (seed 1, 1,792 MB
+# heap, tools/jvm_threads.py) the heap mapping held 1,739 MB resident
+# under G1 and 781 MB under Parallel. Left out when the caller chose a
+# collector (``_COLLECTOR_FLAG`` in its ``extraJavaOptions`` or in one
+# of ``_JVM_OPTION_VARS``): a JVM given two refuses to start.
+COLLECTOR = "-XX:+UseParallelGC"
+_COLLECTOR_FLAG = re.compile(r"-XX:\+Use(?:Serial|Parallel|G1|Z|Shenandoah|Epsilon)GC\b")
+_JVM_OPTION_VARS = ("JAVA_TOOL_OPTIONS", "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS")
 
 
 def default_heap() -> str:
@@ -133,14 +147,18 @@ def get_spark(
 
     ``cores`` is an int for ``local[N]`` or a full master URL; defaults to
     ``$SPARK_GRAFT_CPUS`` (falling back to ``local[*]``). The driver heap
-    is ``$SPARK_DRIVER_MEMORY``, else ``default_heap()``. A session
-    that launches the driver JVM maps the class-data archive kept in
-    ``$XDG_CACHE_HOME/lynxkite_spark/cds`` (or dumps it at exit, a few
-    seconds, when that JDK and jar set has none) and runs with
-    ``TIER4_THRESHOLDS``, both through ``spark.driver.defaultJavaOptions``,
-    which is the engine's to set: a caller that passes it gets neither.
-    Both are for the driver JVM only; under ``spark-submit`` pass the
-    thresholds with ``--driver-java-options``. Executors keep the JVM
+    is ``$SPARK_DRIVER_MEMORY``, else ``default_heap()``, fixed
+    (``-Xms`` = ``-Xmx``). A session that launches the driver JVM maps
+    the class-data archive kept in ``$XDG_CACHE_HOME/lynxkite_spark/cds``
+    (or dumps it at exit, a few seconds, when that JDK and jar set has
+    none), runs with ``TIER4_THRESHOLDS`` and on the Parallel collector
+    (``COLLECTOR``), all through ``spark.driver.defaultJavaOptions``,
+    which is the engine's to set: a caller that passes it gets none of
+    them. A caller that picks a collector in ``extraJavaOptions``,
+    ``JAVA_TOOL_OPTIONS``, ``_JAVA_OPTIONS`` or ``SPARK_SUBMIT_OPTS``
+    keeps it, and the engine adds none. All of these are for the
+    driver JVM only; under ``spark-submit`` pass the thresholds and the
+    collector with ``--driver-java-options``. Executors keep the JVM
     defaults.
     """
     heap = os.environ.get("SPARK_DRIVER_MEMORY") or default_heap()
@@ -169,18 +187,19 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", heap)
-        # FIXED heap (-Xms == -Xmx): without it G1 uncommits idle regions
-        # back to the OS after every concurrent cycle, and on a
-        # virtualized host with free-page reporting (this sandbox is a
-        # Firecracker microVM with page_reporting_order=11) every
-        # uncommitted page is immediately reclaimed by the hypervisor —
-        # so each GC cycle re-faults gigabytes through the host, turning
-        # young GCs from <1s into 15-20s and tripling shuffle walls
-        # (measured on the 32M-edge PageRank probe: 71-190s/2-iter
-        # without, 36s with; GC time 17-21s -> 0.5s). Standard practice
-        # on real clusters for exactly this class of reasons: executors
-        # set -Xms = -Xmx so the heap never shrinks. Callers can extend
-        # via extra_conf (the builder overrides this key when passed).
+        # FIXED heap (-Xms == -Xmx): without it any collector may shrink
+        # the heap and uncommit what it freed, and on a virtualized host
+        # with free-page reporting (a Firecracker microVM with
+        # page_reporting_order=11) every uncommitted page is reclaimed by
+        # the hypervisor at once, so the next GC cycle re-faults it
+        # through the host: measured under G1 on the 32M-edge PageRank
+        # probe, 71-190s/2-iter without it, 36s with; GC time 17-21s ->
+        # 0.5s. Executors on real clusters set -Xms = -Xmx for the same
+        # reason. A fixed heap is committed, not resident: a page becomes
+        # resident when first written, and how much of the heap gets
+        # written is the collector's doing (see COLLECTOR). Callers can
+        # extend via extra_conf (the builder overrides this key when
+        # passed).
         # (AlwaysPreTouch was trialled here in round 6 — ~72 s of boot
         # wall to fault 48 GB through the hypervisor — and did NOT
         # remove the multi-second co-tenant stall windows that hit
@@ -220,9 +239,15 @@ def get_spark(
     cds = None
     if SparkContext._gateway is None and "spark.driver.defaultJavaOptions" not in (extra_conf or {}):
         cds = _cds_plan()
+        chosen = [(extra_conf or {}).get("spark.driver.extraJavaOptions", "")]
+        chosen += [os.environ.get(v, "") for v in _JVM_OPTION_VARS]
+        options = [TIER4_THRESHOLDS]
+        if not any(_COLLECTOR_FLAG.search(o) for o in chosen):
+            options.append(COLLECTOR)
+        if cds:
+            options.append(cds[0])
         # Spark puts these in front of extraJavaOptions, which callers replace
-        options = f"{TIER4_THRESHOLDS} {cds[0]}" if cds else TIER4_THRESHOLDS
-        builder = builder.config("spark.driver.defaultJavaOptions", options)
+        builder = builder.config("spark.driver.defaultJavaOptions", " ".join(options))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     try:

@@ -1,7 +1,8 @@
 """The driver JVM's options (session.py): the class-data archive's key,
 the guards that keep its flags off, the dump's keep-or-delete step, the
-tier-4 JIT thresholds, and one end-to-end run of a dumping, a mapping
-and a corrupt-archive session."""
+tier-4 JIT thresholds, the collector and the guard that keeps it off
+when the caller chose one, and fresh-process runs of a dumping, a
+mapping and a corrupt-archive session and of a caller's own collector."""
 
 import json
 import os
@@ -13,7 +14,7 @@ import pytest
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-from lynxkite_spark.session import TIER4_THRESHOLDS, _cds_key, _cds_plan, _finish_dump, get_spark
+from lynxkite_spark.session import COLLECTOR, TIER4_THRESHOLDS, _cds_key, _cds_plan, _finish_dump, get_spark
 
 ROOT = Path(__file__).resolve().parent.parent
 
@@ -135,10 +136,23 @@ def _launch_options(monkeypatch, **kwargs):
 
 
 def test_driver_jvm_gets_the_tier4_thresholds_with_or_without_an_archive(fake_spark, monkeypatch, tmp_path):
+    """And the collector, in both cases."""
     options, _ = _launch_options(monkeypatch)
-    assert options.startswith(f"{TIER4_THRESHOLDS} -XX:ArchiveClassesAtExit=")
+    assert options.startswith(f"{TIER4_THRESHOLDS} {COLLECTOR} -XX:ArchiveClassesAtExit=")
     monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
-    assert _launch_options(monkeypatch) == (TIER4_THRESHOLDS, str(tmp_path))
+    assert _launch_options(monkeypatch) == (f"{TIER4_THRESHOLDS} {COLLECTOR}", str(tmp_path))
+
+
+@pytest.mark.parametrize("where", ["extraJavaOptions", "JAVA_TOOL_OPTIONS", "_JAVA_OPTIONS", "SPARK_SUBMIT_OPTS"])
+def test_no_second_collector_when_the_caller_chose_one(fake_spark, monkeypatch, where):
+    mine = "-Dprobe=1 -XX:+UseG1GC"
+    if where == "extraJavaOptions":
+        options, _ = _launch_options(monkeypatch, extra_conf={"spark.driver.extraJavaOptions": mine})
+    else:
+        monkeypatch.setenv(where, mine)
+        options, _ = _launch_options(monkeypatch)
+    assert options.startswith(f"{TIER4_THRESHOLDS} -XX:ArchiveClassesAtExit=")
+    assert COLLECTOR not in options
 
 
 def test_callers_default_java_options_pass_through_unchanged(fake_spark, monkeypatch):
@@ -148,24 +162,27 @@ def test_callers_default_java_options_pass_through_unchanged(fake_spark, monkeyp
 
 
 _SESSION = """
-import json
+import json, sys
 from lynxkite_spark.session import get_spark
-spark = get_spark(cores=1)
+spark = get_spark(cores=1, extra_conf=json.loads(sys.argv[1]))
 pid = spark.sparkContext._gateway.proc.pid
+beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+gc = sorted(b.getName() for b in beans)
 with open(f"/proc/{pid}/maps") as f:
     mapped = sorted({line.split()[-1] for line in f if line.rstrip().endswith(".jsa")})
 with open(f"/proc/{pid}/cmdline") as f:
     tier4 = any(arg.startswith("-XX:Tier4InvocationThreshold=") for arg in f.read().split("\\0"))
 rows = spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count().orderBy("k").collect()
-print(json.dumps({"rows": [list(r) for r in rows], "mapped": mapped, "tier4": tier4}))
+print(json.dumps({"rows": [list(r) for r in rows], "mapped": mapped, "tier4": tier4, "gc": gc}))
 """
+ROWS = [[k, 143 if k < 6 else 142] for k in range(7)]
 
 
-def _session(cache):
+def _session(cache, extra_conf=None):
     env = {k: v for k, v in os.environ.items() if k not in ("PYSPARK_GATEWAY_PORT", "SPARK_CONF_DIR")}
     env.update(XDG_CACHE_HOME=str(cache), SPARK_DRIVER_MEMORY="1g", PYTHONPATH=str(ROOT))
     out = subprocess.run(
-        [sys.executable, "-c", _SESSION],
+        [sys.executable, "-c", _SESSION, json.dumps(extra_conf or {})],
         env=env,
         cwd=ROOT,
         stdout=subprocess.PIPE,
@@ -181,8 +198,8 @@ def test_first_session_dumps_the_archive_and_the_next_maps_it(tmp_path, monkeypa
     """Two fresh processes on an empty cache: the first leaves the
     archive behind at exit, the second's driver JVM maps it. A third,
     over an archive overwritten with random bytes, starts without it.
-    Every JVM runs with the tier-4 thresholds, and all three give the
-    same rows."""
+    Every JVM runs with the tier-4 thresholds and the Parallel
+    collector, and all three give the same rows."""
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
     for var in ("PYSPARK_GATEWAY_PORT", "SPARK_CONF_DIR"):
         monkeypatch.delenv(var, raising=False)
@@ -201,4 +218,14 @@ def test_first_session_dumps_the_archive_and_the_next_maps_it(tmp_path, monkeypa
     third = _session(tmp_path)
     assert str(jsa) not in third["mapped"]
     assert first["tier4"] and second["tier4"] and third["tier4"]
-    assert first["rows"] == second["rows"] == third["rows"] == [[k, 143 if k < 6 else 142] for k in range(7)]
+    assert first["gc"] == second["gc"] == third["gc"] == ["PS MarkSweep", "PS Scavenge"]
+    assert first["rows"] == second["rows"] == third["rows"] == ROWS
+
+
+def test_callers_collector_replaces_the_engines(tmp_path):
+    """A collector in the caller's ``extraJavaOptions`` is the only one
+    the driver JVM gets: given two, it would not start."""
+    (tmp_path / "file").write_text("")  # a cache under a file: no archive, no dump
+    out = _session(tmp_path / "file", {"spark.driver.extraJavaOptions": "-Xms1g -XX:+UseG1GC"})
+    assert out["gc"] == ["G1 Old Generation", "G1 Young Generation"]
+    assert out["tier4"] and out["rows"] == ROWS

@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Driver JVM CPU by thread class, around each phase of a perfbench run.
+"""Driver JVM CPU by thread class and memory by mapping, around each
+phase of a perfbench run.
 
     python3 tools/jvm_threads.py --workload repo_graph --seed 1 --passes 2
 
@@ -16,7 +17,8 @@ thread class:
   Janino compiles on the driver and broadcast builds
 - ``sched``: the DAG scheduler, RPC dispatch, block manager, map-output
   tracker, listener bus and heartbeats
-- ``GC``: the GC worker threads, G1's concurrent threads and the VM
+- ``GC``: the collector's worker threads (``GC Thread#N``), its
+  concurrent threads when it has them (G1's ``G1 …``) and the VM
   thread (safepoints)
 - ``other``: every other thread; ``exited``: CPU of threads that
   ended before a sample saw it (the process total less the rest)
@@ -25,15 +27,21 @@ HotSpot retires idle compiler threads (``UseDynamicNumberOfCompilerThreads``)
 and Spark ends idle pool threads, so a background thread samples every
 thread each ``SAMPLE_S`` and keeps an ended thread's last reading.
 
-A change that moves set-up or pass CPU shows here in which layer it
-moved. Uses the benchmark's own inputs, work directory and session
-settings, and changes no file of it. Linux only.
+After each phase it also reads the JVM's peak resident set (``VmHWM``)
+and, from ``/proc/<pid>/smaps``, the resident MB of the Java heap's
+mapping (its address range asked of the JVM once), of the class-data
+archives (``.jsa``, the JDK's and the engine's) and of everything else.
+
+A change that moves set-up or pass CPU, or peak RSS, shows here in
+which layer it moved. Uses the benchmark's own inputs, work directory
+and session settings, and changes no file of it. Linux only.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import shutil
 import sys
 import threading
@@ -135,6 +143,41 @@ def delta(before, after) -> dict[str, float]:
     return out
 
 
+def heap_range(spark) -> tuple[int, int]:
+    """The driver JVM's heap reservation ``[lo, hi)``, from the JVM's own
+    ``GC.heap_info`` diagnostic command. The call goes through the
+    public ``MBeanServer`` interface: py4j cannot reach the methods of
+    its implementing class, which sits in an unexported package."""
+    jvm, gateway = spark._jvm, spark.sparkContext._gateway
+    server = jvm.java.lang.management.ManagementFactory.getPlatformMBeanServer()
+    methods = jvm.java.lang.Class.forName("javax.management.MBeanServer").getMethods()
+    invoke = next(m for m in methods if m.getName() == "invoke")
+    args = gateway.new_array(jvm.java.lang.Object, 4)
+    args[0] = jvm.javax.management.ObjectName("com.sun.management:type=DiagnosticCommand")
+    args[1] = "gcHeapInfo"
+    args[2] = gateway.new_array(jvm.java.lang.Object, 0)
+    args[3] = gateway.new_array(jvm.java.lang.String, 0)
+    # every address before the Metaspace line bounds a heap space
+    heap = invoke.invoke(server, args).split(" Metaspace")[0]
+    addresses = [int(a, 16) for a in re.findall(r"0x[0-9a-f]+", heap)]
+    return min(addresses), max(addresses)
+
+
+def memory(pid: int, heap: tuple[int, int]) -> dict[str, float]:
+    """``VmHWM`` and the resident MB of the heap mapping, the ``.jsa``
+    mappings and the rest, from ``/proc/<pid>/smaps``."""
+    out = dict.fromkeys(("heap", "jsa", "rest"), 0.0)
+    with open(f"/proc/{pid}/smaps") as f:
+        for line in f:
+            fields = line.split()
+            if not fields[0].endswith(":"):  # a mapping's header: range, perms, ..., path
+                start = int(fields[0].split("-")[0], 16)
+                part = "heap" if heap[0] <= start < heap[1] else "jsa" if fields[-1].endswith(".jsa") else "rest"
+            elif fields[0] == "Rss:":
+                out[part] += int(fields[1]) / 1024
+    return {"VmHWM": host.vm_hwm_mb(pid), **out}
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--workload", required=True)
@@ -162,9 +205,12 @@ def main(argv=None) -> int:
             app_name=f"jvm_threads-{cls.name}",
             extra_conf=host.spark_conf(work, heap, None),
         )
-        sampler = Sampler(spark.sparkContext._gateway.proc.pid)
+        pid = spark.sparkContext._gateway.proc.pid
+        sampler = Sampler(pid)
         last = sampler.read()
         rows.append(("session", time.perf_counter() - t0, delta((0.0, {}), last)))
+        reserved = heap_range(spark)
+        mem = [("session", memory(pid, reserved))]
         sampler.start()
         try:
             tracer = Tracer(work.name)
@@ -177,6 +223,7 @@ def main(argv=None) -> int:
                     fn()
                 now = sampler.read()
                 rows.append((name, time.perf_counter() - t0, delta(last, now)))
+                mem.append((name, memory(pid, reserved)))
                 last = now
         finally:
             sampler.done.set()
@@ -189,6 +236,11 @@ def main(argv=None) -> int:
     print(f"{'phase':<10} {'wall':>7} {'total':>7}" + "".join(f" {c:>7}" for c in COLUMNS))
     for name, wall, cpu in rows:
         print(f"{name:<10} {wall:>7.2f} {sum(cpu.values()):>7.2f}" + "".join(f" {cpu[c]:>7.2f}" for c in COLUMNS))
+    mapping = (reserved[1] - reserved[0]) >> 20
+    print(f"driver JVM MB after each phase: VmHWM, then resident by mapping (heap mapping {mapping} MB)")
+    print(f"{'phase':<10}" + "".join(f" {c:>7}" for c in mem[0][1]))
+    for name, mb in mem:
+        print(f"{name:<10}" + "".join(f" {v:>7.0f}" for v in mb.values()))
     for line in ledger.lines:
         print(line)
     return 1 if ledger.failed else 0

@@ -126,11 +126,13 @@ def main() -> None:
         extra_conf={
             # identical static plan at every level (BENCH/BASELINE.md)
             "spark.sql.adaptive.enabled": "false",
-            # FIXED, PRE-TOUCHED heap: -Xms == -Xmx stops G1 from
-            # uncommitting idle regions (on this Firecracker host with
+            # FIXED, PRE-TOUCHED heap: -Xms == -Xmx stops the collector
+            # (Parallel, from get_spark) from shrinking the heap and
+            # uncommitting idle pages (on a Firecracker host with
             # free-page reporting every uncommit is reclaimed by the
             # hypervisor and re-faulted on the next GC cycle — measured
-            # 2-5x slowdown and 17-21s young GCs on the probe job);
+            # under G1: 2-5x slowdown and 17-21s young GCs on the probe
+            # job);
             # AlwaysPreTouch moves ALL first-touch faults into JVM
             # startup, outside the leg's timed window. Same flags a real
             # cluster's executor JVMs run with (Xms=Xmx is standard).
