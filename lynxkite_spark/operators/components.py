@@ -24,6 +24,9 @@ Two algorithms:
     vertex is the leaf (``src``) of two edges and no leaf is also a
     centre (``dst``). That set is a fixed point of the round, and each
     centre is its component's minimum, so no confirming round is run.
+    Each star step takes its per-vertex minimum as a window over the
+    edges, not as a grouped table joined back, so a round is three
+    shuffles and no join, with no size switch to choose one.
 
 Both are integer-exact by construction (min/joins only, no float math).
 """
@@ -32,13 +35,13 @@ from __future__ import annotations
 
 from functools import partial
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from lynxkite_spark.graph import Graph
 from lynxkite_spark.plans.checkpoint import step_key
-from lynxkite_spark.plans.iterate import PREV, broadcasts, changed_rows, run_supersteps
+from lynxkite_spark.plans.iterate import PREV, changed_rows, run_supersteps
 
 
 def _symmetrized(edges: DataFrame) -> DataFrame:
@@ -46,46 +49,41 @@ def _symmetrized(edges: DataFrame) -> DataFrame:
     return e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
 
 
-def _large_star(edges: DataFrame, broadcast_m: bool = False) -> DataFrame:
+def _large_star(edges: DataFrame) -> DataFrame:
     """large-star (Kiveris et al., CC-MR): over both orientations, for
     each node u with neighborhood N(u): m = min(N(u) ∪ {u}); emit
-    (v, m) for every v ∈ N(u) with v > u. Preserves connectivity."""
+    (v, m) for every v ∈ N(u) with v > u. Preserves connectivity.
+
+    m is a window minimum over the src-partitioned edges, so the step
+    is one exchange and reads the edges once; a grouped minimum joined
+    back would read them twice and need a broadcast or a hash join."""
     sym = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    m = (
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("mn"))
-        .select("src", F.least(F.col("mn"), F.col("src")).alias("m"))
-    )
-    # While the min table is vertex-sized-small, broadcast it — the edge
-    # stream is then never exchanged for the relink join at all; above
-    # the threshold, hash-build it so the big stream is at least never
-    # sorted (same discipline as the PageRank gather join).
-    m = F.broadcast(m) if broadcast_m else m.hint("shuffle_hash")
+    m = F.least(F.min("dst").over(Window.partitionBy("src")), F.col("src"))
     return (
-        sym.join(m, "src")
+        sym.select("src", "dst", m.alias("m"))
         .where(F.col("dst") > F.col("src"))
         .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
     )
 
 
-def _small_star(edges: DataFrame, broadcast_m: bool = False) -> DataFrame:
+def _small_star(edges: DataFrame) -> DataFrame:
     """small-star: orient each edge large→small; for each u over its
     smaller neighbors N: m = min(N ∪ {u}); emit (v, m) for every
-    v ∈ N ∪ {u}, v ≠ m. Preserves connectivity."""
+    v ∈ N ∪ {u}, v ≠ m. Preserves connectivity.
+
+    m = min(N) is a window minimum over the oriented edges; each edge
+    (u, d) then emits (u, m) and (d, m), which together are the relinked
+    neighbours and u's own link, and ``distinct`` keeps one of each."""
     oriented = edges.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     ).where(F.col("src") != F.col("dst"))
-    m = oriented.groupBy("src").agg(F.min("dst").alias("m"))
-    mb = F.broadcast(m) if broadcast_m else m.hint("shuffle_hash")
-    relinked = oriented.join(mb, "src").select(
-        F.col("dst").alias("src"), F.col("m").alias("dst")
-    )
-    self_link = m.select("src", F.col("m").alias("dst"))
+    m = F.min("dst").over(Window.partitionBy("src"))
     return (
-        relinked.unionByName(self_link)
-        .where(F.col("src") != F.col("dst"))
+        oriented.select(F.explode(F.array("src", "dst")).alias("v"), m.alias("m"))
+        .where(F.col("v") != F.col("m"))
+        .select(F.col("v").alias("src"), F.col("m").alias("dst"))
         .distinct()
     )
 
@@ -128,7 +126,6 @@ def connected_components(
     checkpointed the same way."""
     n_part = int(graph.vertices.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     vertices = graph.vertices.select("id")
-    edges = _symmetrized(graph.edges)
     params = {"algorithm": algorithm, "max_iterations": max_iterations}
     harness = {
         "limit": max_iterations,
@@ -138,23 +135,16 @@ def connected_components(
     }
 
     if algorithm == "star":
-        broadcast_m = False
-
-        def setup() -> DataFrame:
-            # per-round min tables are bounded by the (shrinking) vertex
-            # count: broadcast them below the same switch pagerank uses
-            # for its rank table — the contracted edge stream then never
-            # shuffles for the relink joins, only for groupBy/distinct
-            nonlocal broadcast_m
-            broadcast_m = broadcasts(graph.vertices.count())
-            return edges
-
         # the state is the contracted edge set itself; star contraction
         # references it several times per round (plan growth, see
-        # materialize), so the driver's per-round lineage cut matters
+        # materialize), so the driver's per-round lineage cut matters.
+        # It starts as the input edges, loops dropped: large-star reads
+        # both orientations and its minimum ignores duplicates, so round
+        # 1's output set is the same as from the symmetrized, distinct
+        # edges, and the set-up needs no dedup pass or vertex count.
         e = run_supersteps(
-            setup,
-            lambda e, k: _small_star(_large_star(e, broadcast_m), broadcast_m),
+            lambda: graph.edges.select("src", "dst").where(F.col("src") != F.col("dst")),
+            lambda e, k: _small_star(_large_star(e)),
             changed=_star_forest,
             **harness,
         )
@@ -166,6 +156,7 @@ def connected_components(
         )
     else:  # minlabel
         pinned: list[DataFrame] = []
+        edges = _symmetrized(graph.edges)
 
         def setup() -> DataFrame:
             nonlocal edges

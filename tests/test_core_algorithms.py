@@ -146,6 +146,48 @@ def test_components_star_stops_at_first_star_forest(spark, tmp_path):
     assert [h["iteration"] for h in cp.metrics(step_key("star", "cc", params, 1))["metrics"]["history"]] == [1]
 
 
+def test_components_multigraph_parity(spark):
+    """Star CC starts from the input edges as they are, neither
+    symmetrized nor deduplicated: duplicate edges, both orientations of
+    an edge, self-loops and isolated vertices give the oracle's labels on
+    both algorithms, and star's first round yields each edge once, the
+    same set as from the symmetrized, distinct edges."""
+    from collections import Counter
+
+    from lynxkite_spark.operators.components import _large_star, _small_star, _symmetrized
+
+    pairs = [(1, 2), (1, 2), (2, 1), (2, 3), (3, 3), (4, 4), (6, 5), (5, 6), (6, 5), (7, 6), (9, 8), (8, 9), (9, 9)]
+    vertices = list(range(12))  # 0, 10 and 11 isolated; 4 has only a loop
+    g = as_graph(spark, vertices, pairs)
+    endpoints = sorted({v for p in pairs for v in p})
+    for graph, ids in ((g, vertices), (Graph.from_edges(g.edges), endpoints)):
+        want = components_oracle(ids, pairs)
+        for algorithm in ("star", "minlabel"):
+            got = {r["id"]: r["component"] for r in connected_components(graph, algorithm=algorithm).collect()}
+            assert got == want, algorithm
+
+    def round1(e):
+        return Counter(tuple(r) for r in _small_star(_large_star(e)).collect())
+
+    raw = round1(g.edges)
+    assert raw == round1(_symmetrized(g.edges))
+    assert set(raw.values()) == {1}
+
+
+def test_star_round_plans_three_shuffles_and_no_broadcast(spark):
+    """One star round takes its minima as windows: it plans exactly three
+    shuffle exchanges (large-star's window, small-star's window, the
+    distinct) and no broadcast, whatever the state's size."""
+    import re
+
+    from lynxkite_spark.operators.components import _large_star, _small_star
+
+    e = spark.createDataFrame([(1, 2), (2, 3), (5, 4)], "src long, dst long").localCheckpoint()
+    plan = _small_star(_large_star(e))._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan
+    assert len(re.findall(r"^[\s:|+-]*Exchange ", plan, re.MULTILINE)) == 3, plan
+
+
 # ----------------------------------------------------------- Triangles
 
 

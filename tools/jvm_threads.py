@@ -183,6 +183,7 @@ def main(argv=None) -> int:
     p.add_argument("--workload", required=True)
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--passes", type=int, default=2)
+    p.add_argument("--java-options", default="", help="added to the driver JVM's extraJavaOptions, for probe flags")
     args = p.parse_args(argv)
     require_engine()
     from perfbench.workloads import WORKLOADS
@@ -198,12 +199,14 @@ def main(argv=None) -> int:
     ledger = Ledger()
     rows = []
     try:
+        conf = host.spark_conf(work, heap, None)
+        conf["spark.driver.extraJavaOptions"] += f" {args.java_options}"
         t0 = time.perf_counter()
         spark = get_spark(
             cores=ncores,
             shuffle_partitions=ncores,
             app_name=f"jvm_threads-{cls.name}",
-            extra_conf=host.spark_conf(work, heap, None),
+            extra_conf=conf,
         )
         pid = spark.sparkContext._gateway.proc.pid
         sampler = Sampler(pid)
