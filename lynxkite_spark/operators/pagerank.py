@@ -24,9 +24,8 @@ Direction handling follows the frontend's Direction wrapper
 
 Scale notes (SURVEY.md §4):
   * edges are normalized once, repartitioned by ``src`` and cached — every
-    iteration reuses that single shuffle for the gather join;
-  * the gather join is skew-split HybridRDD-style (plans/skew.py): hub
-    sources join against a broadcast of just the hot rank rows;
+    iteration reuses that single shuffle for the gather join, so a hub
+    source's edges stay in one partition whatever the join strategy;
   * groupBy(dst) skew needs no salting — sum() partial-aggregates
     map-side before the shuffle;
   * the superstep driver (plans/iterate.py) cuts lineage every
@@ -46,7 +45,6 @@ from pyspark.storagelevel import StorageLevel
 from lynxkite_spark.graph import Graph
 from lynxkite_spark.plans.checkpoint import CheckpointManager, step_key
 from lynxkite_spark.plans.iterate import PREV, broadcasts, run_supersteps
-from lynxkite_spark.plans.skew import hybrid_join
 from lynxkite_spark.plans.spread import plan_is_expensive as _plan_is_expensive
 
 
@@ -60,7 +58,6 @@ def pagerank(
     checkpoint: CheckpointManager | None = None,
     checkpoint_every: int = 10,
     input_fingerprint: str | None = None,
-    skew_threshold: int | None = None,
 ) -> DataFrame:
     """Returns DataFrame[id: long, pagerank: double].
 
@@ -69,18 +66,14 @@ def pagerank(
     """
     spark = graph.vertices.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if skew_threshold is None:
-        from lynxkite_spark.session import HOT_KEY_THRESHOLD
-
-        skew_threshold = HOT_KEY_THRESHOLD
     # what the round body reads, prepared by ``setup``; a call whose
     # final round is stored (a memo hit) never runs it
     pinned: list[DataFrame] = []
-    en = hot = None
-    n_vertices, broadcast_ranks, use_hybrid = 0, False, False
+    en = None
+    n_vertices, broadcast_ranks = 0, False
 
     def setup() -> DataFrame:
-        nonlocal en, hot, n_vertices, broadcast_ranks, use_hybrid
+        nonlocal en, n_vertices, broadcast_ranks
         # Pin an expensive-to-recompute RAW edge table once up front —
         # the set-up references it through several derived plans (edge
         # normalization, source set, and — for from_edges graphs — the
@@ -125,19 +118,19 @@ def pagerank(
         # non-dangling vertices — an exact algebraic identity that turns
         # the global total into a scan of the (small, cached) rank table
         # instead of a second consumption of the expensive gather join.
-        # ``deg`` (each source's edge count, from the cache, not the
-        # input) also names the hot keys, so one aggregate over this
-        # table — which fills both caches — is the whole set-up action.
+        # The sources are read from the cache, not the input, so one
+        # count of this table — which fills both caches — is the whole
+        # set-up action.
         srcs = en.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
         vertices = (
             g.vertices.select("id")
             .join(srcs, "id", "left")
-            .select("id", F.col("deg").isNotNull().alias("has_out"), F.coalesce("deg", F.lit(0)).alias("deg"))
+            .select("id", F.col("deg").isNotNull().alias("has_out"))
             .repartition(n_part, "id")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         pinned.append(vertices)
-        n_vertices, max_deg = vertices.agg(F.count(F.lit(1)), F.max("deg")).first()
+        n_vertices = vertices.count()
         if edges_pinned is not None:
             edges_pinned.unpersist()
 
@@ -149,17 +142,8 @@ def pagerank(
         # on this box it stops paying for itself around a few hundred
         # thousand rows, and past that it caps scaling (the parallel join
         # is fast, the broadcast build is not). Above the switch the
-        # co-partitioned shuffle join (or the hybrid hot-key split) takes
-        # over.
+        # co-partitioned shuffle join takes over.
         broadcast_ranks = broadcasts(n_vertices)
-        # hot keys of the gather join (HybridRDD semantics: sources with
-        # more than ``skew_threshold`` edges, the set ``hot_keys(en,
-        # "src", skew_threshold)`` gives); when no key crosses the
-        # threshold the plain shuffle join is used — the hybrid split
-        # costs two extra joins per iteration for nothing. A broadcast
-        # join has no skew to split.
-        use_hybrid = not broadcast_ranks and (max_deg or 0) > skew_threshold
-        hot = vertices.where(F.col("deg") > skew_threshold).select(F.col("id").alias("src"))
         return vertices.select("id", "has_out", F.lit(1.0).alias("pagerank"))
 
     params = {"damping": damping, "iterations": iterations, "tol": tol, "direction": direction}
@@ -181,8 +165,6 @@ def pagerank(
         rank_lookup = ranks.select(F.col("id").alias("src"), "pagerank")
         if broadcast_ranks:
             gathered = en.join(F.broadcast(rank_lookup), "src")
-        elif use_hybrid:
-            gathered = hybrid_join(en, rank_lookup, "src", hot=hot)
         else:
             # hash join with the rank table as build side: avoids
             # re-sorting the (much larger) edge table every iteration,

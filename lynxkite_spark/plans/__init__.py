@@ -1,4 +1,3 @@
 from lynxkite_spark.plans.checkpoint import CheckpointManager, materialize
-from lynxkite_spark.plans.skew import hot_keys, split_hot
 
-__all__ = ["CheckpointManager", "materialize", "hot_keys", "split_hot"]
+__all__ = ["CheckpointManager", "materialize"]

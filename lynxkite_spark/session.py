@@ -22,12 +22,6 @@ from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
-# Reference partition-sizing anchors (BASELINE.md):
-#   EntityIO.scala:82-83  -> 200_000 rows/partition target
-#   HybridRDD.scala:73-80 -> 40_000 rows/key hot-key threshold
-ROWS_PER_PARTITION = 200_000
-HOT_KEY_THRESHOLD = 40_000
-
 # The driver JVM's C2 (tier-4) thresholds at 5x the JDK 17 defaults; C1
 # (tiers 1-3) keeps its own, so code leaves the interpreter as before.
 # A session lives about a minute, and most of the JDK serialization,
@@ -207,11 +201,10 @@ def get_spark(
         # where its cost sits outside the timed window.)
         .config("spark.driver.extraJavaOptions", f"-Xms{heap}")
         # Broadcast threshold stays at Spark's default 10MB: every join that
-        # SHOULD broadcast (dictionaries, hot-key subsets, small rank
-        # tables) is hinted explicitly with F.broadcast(). A generous
-        # threshold is actively harmful in the iterative loops — AQE
-        # converts the per-iteration rank join into a runtime broadcast,
-        # and building a multi-million-row broadcast relation is a serial
+        # SHOULD broadcast (dictionaries, small rank tables) is hinted
+        # explicitly with F.broadcast(). A generous threshold is actively
+        # harmful in the iterative loops — AQE converts the per-iteration
+        # rank join into a runtime broadcast, and building a multi-million-row broadcast relation is a serial
         # driver-side step that caps scaling (measured: 3x slowdown at 32
         # cores on the PageRank gather join).
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))

@@ -1,4 +1,4 @@
-"""Skew handling (HybridRDD semantics) + physical-plan assertions."""
+"""Skew handling + physical-plan assertions."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,34 +7,15 @@ from lynxkite_spark.corpus import synth_corpus
 from lynxkite_spark.derive import derive_file_edges, derive_repo_edges
 from lynxkite_spark.graph import Graph
 from lynxkite_spark.operators import pagerank
-from lynxkite_spark.plans.skew import hot_keys, hybrid_join, salted_join
+from lynxkite_spark.plans import iterate
+from tests.oracles import pagerank_oracle
 
 
-def test_hybrid_join_equals_plain_join(spark):
-    """The hybrid split must be a pure execution-strategy change."""
-    big = spark.createDataFrame(
-        [(i % 5, i) for i in range(1000)], "k long, payload long"
-    )
-    lookup = spark.createDataFrame([(i, i * 10) for i in range(5)], "k long, v long")
-    hot = hot_keys(big, "k", threshold=150)  # keys 0..4 each have 200 rows
-    assert hot.count() == 5
-    a = sorted(tuple(r) for r in hybrid_join(big, lookup, "k", hot=hot).collect())
-    b = sorted(tuple(r) for r in big.join(lookup, "k").collect())
-    assert a == b
-
-
-def test_salted_join_equals_plain_join(spark):
-    big = spark.createDataFrame([(i % 3, i) for i in range(300)], "k long, payload long")
-    lookup = spark.createDataFrame([(i, i * 10) for i in range(3)], "k long, v long")
-    a = sorted(tuple(r) for r in salted_join(big, lookup, "k", salts=8).collect())
-    b = sorted(tuple(r) for r in big.join(lookup, "k").collect())
-    assert a == b
-
-
-def test_pagerank_on_skewed_hub_corpus(spark):
+def test_pagerank_on_skewed_hub_corpus(spark, monkeypatch):
     """FIXTURES.md skew fixture: ≥30% of files import the hub repo.
-    PageRank with a tiny skew threshold (forces the hybrid path) must
-    match PageRank with the hybrid path disabled."""
+    Reversed (``direction="incoming"``), the hub is the gather join's
+    skewed ``src`` key; PageRank matches the pure-Python oracle on both
+    sides of the broadcast switch."""
     corpus = synth_corpus(spark, n_repos=30, n_files=600, seed=42, hub_fraction=0.4)
     edges, _ = derive_repo_edges(corpus)
     g = Graph.from_edges(edges)
@@ -46,17 +27,20 @@ def test_pagerank_on_skewed_hub_corpus(spark):
     total = edges.agg(F.sum("weight")).first()[0]
     assert top["w"] / total > 0.25
 
-    r_plain = {
-        r["id"]: r["pagerank"]
-        for r in pagerank(g, iterations=5, tol=None, skew_threshold=10**9).collect()
-    }
-    r_hybrid = {
-        r["id"]: r["pagerank"]
-        for r in pagerank(g, iterations=5, tol=None, skew_threshold=1).collect()
-    }
-    assert set(r_plain) == set(r_hybrid)
-    for k in r_plain:
-        assert r_plain[k] == pytest.approx(r_hybrid[k], abs=1e-9)
+    rows = edges.select("src", "dst", "weight").collect()
+    vertices = sorted({r["src"] for r in rows} | {r["dst"] for r in rows})
+    oracle = pagerank_oracle(
+        vertices, [(r["dst"], r["src"], r["weight"]) for r in rows], damping=0.85, iterations=5
+    )
+    for broadcast_max in (iterate.BROADCAST_MAX_VERTICES, 0):
+        monkeypatch.setattr(iterate, "BROADCAST_MAX_VERTICES", broadcast_max)
+        got = {
+            r["id"]: r["pagerank"]
+            for r in pagerank(g, iterations=5, tol=None, direction="incoming").collect()
+        }
+        assert set(got) == set(oracle)
+        for k in oracle:
+            assert got[k] == pytest.approx(oracle[k], abs=1e-9), (broadcast_max, k)
 
 
 def test_parquet_scan_prunes_columns(spark):
@@ -95,22 +79,18 @@ def test_dictionary_join_is_broadcast(spark):
 
 
 def test_pagerank_join_paths_equivalent(spark, monkeypatch):
-    """The broadcast / hybrid / shuffle-hash gather paths are pure
-    execution-strategy choices: identical ranks from all three."""
+    """The broadcast and shuffle-hash gather paths are pure
+    execution-strategy choices: identical ranks from both."""
     from lynxkite_spark.operators.generators import erdos_renyi
-    from lynxkite_spark.plans import iterate
 
     g = erdos_renyi(spark, n=400, avg_degree=8, seed=7)
     monkeypatch.setattr(iterate, "BROADCAST_MAX_VERTICES", 10**9)
     r_bcast = {r["id"]: r["pagerank"] for r in pagerank(g, iterations=5, tol=None).collect()}
     monkeypatch.setattr(iterate, "BROADCAST_MAX_VERTICES", 0)
     r_shuffle = {r["id"]: r["pagerank"] for r in pagerank(g, iterations=5, tol=None).collect()}
-    # sources with more than 8 edges are hot: the hybrid split
-    r_hybrid = {r["id"]: r["pagerank"] for r in pagerank(g, iterations=5, tol=None, skew_threshold=8).collect()}
-    assert set(r_bcast) == set(r_shuffle) == set(r_hybrid)
+    assert set(r_bcast) == set(r_shuffle)
     for k in r_bcast:
         assert r_bcast[k] == pytest.approx(r_shuffle[k], abs=1e-12)
-        assert r_hybrid[k] == pytest.approx(r_shuffle[k], abs=1e-12)
 
 
 def test_shuffle_hash_hint_respected(spark):
